@@ -15,11 +15,9 @@ SURVEY.md §4 P2).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-import numpy as np
-
-#: Mersenne prime 2^61 - 1 — modulus of the MinHash permutation family.
+#: 2^61 - 1 — the signature value of every bin of a doc with no shingles.
 MERSENNE_P = (1 << 61) - 1
 
 #: Names excluded from both file-level results and dir identity
@@ -37,15 +35,10 @@ class DedupConfig:
     """FIXTURES.md §4 canonical values. threshold ≈ (1/b)^(1/r) ≈ 0.42."""
 
     shingle_k: int = 5            # tokens per shingle
-    minhash_perms: int = 128      # permutation count (== OPH bin count)
-    # "oph": one-permutation hashing + rotation densification — O(N) per
-    #   doc, the scale default (128x less signature compute at 10^12 docs).
-    # "classic": (a*x+b) mod 2^61-1 per permutation — O(perms*N), kept for
-    #   the big-int-verifiable family and A/B tests.
-    minhash_mode: str = "oph"
+    minhash_perms: int = 128      # OPH bin count (one-permutation hashing)
     bands: int = 32               # LSH bands
     rows_per_band: int = 4        # minhash rows per band (32*4 == 128)
-    seed: int = 42                # master seed for hash + perm params
+    seed: int = 42                # master seed for token + MinHash hashing
     verify_jaccard: float = 0.8   # accept threshold on exact shingle Jaccard
     lcs_min_chars: int = 512      # substring tier: min verbatim span
     # winnowing parameters for the substring tier: any shared span of
@@ -82,31 +75,6 @@ class DedupConfig:
     def __post_init__(self) -> None:
         assert self.bands * self.rows_per_band == self.minhash_perms
 
-    @property
-    def perm_params(self) -> tuple[np.ndarray, np.ndarray]:
-        """(a, b) arrays of the permutation family, seeded PRNG, mod 2^61-1.
-
-        a in [1, p), b in [0, p) — classic universal hashing parameters.
-        Deterministic for a given (seed, minhash_perms).
-        """
-        rng = np.random.default_rng(self.seed)
-        a = rng.integers(1, MERSENNE_P, size=self.minhash_perms, dtype=np.uint64)
-        b = rng.integers(0, MERSENNE_P, size=self.minhash_perms, dtype=np.uint64)
-        return a, b
-
 
 #: The one config used everywhere unless a test overrides it.
 DEFAULT_CONFIG = DedupConfig()
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    """Stage-orchestration knobs (SURVEY.md §7 M7)."""
-
-    out_dir: str = "/tmp/finddup_spark_out"
-    cc_max_iters: int = 50                # hash-to-min bound; diameter is tiny
-    cc_checkpoint_every: int = 3          # localCheckpoint cadence
-    shuffle_partitions: int | None = None # None → leave session value
-    stages: tuple[str, ...] = field(
-        default=("signatures", "bands", "edges", "clusters", "rollup", "report")
-    )

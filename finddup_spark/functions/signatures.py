@@ -9,8 +9,8 @@ the hot path:
   (Zipf text ⇒ |vocab| ≪ |tokens|), then gather;
 - shingling: ONE global masked window op over the concatenated token-hash
   array of the whole batch (windows crossing doc boundaries masked out);
-- MinHash: one (perms × N) modular matrix op + segmented min
-  (``np.minimum.reduceat``) per batch;
+- MinHash: one-permutation hashing, one hash pass + scatter-min into
+  bins per batch (:func:`~finddup_spark.hashing.oph_signatures_segmented`);
 - SimHash: segmented bit-vote matrix (``np.add.reduceat``).
 
 uint64 values are stored reinterpreted as int64 (Spark LongType); the
@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 from ..config import DEFAULT_CONFIG, DedupConfig
 from ..hashing import (
     band_hashes,
-    minhash_batch,
+    oph_signatures_segmented,
     shingle_hashes,
     simhash_batch,
     splitmix64,
@@ -155,28 +155,11 @@ def _batch_shingles(
     return out_sh, out_w
 
 
-# minhash travels as BINARY (raw little-endian uint64 bytes): Arrow
-# binary columns are a memcpy per row, while array<long> pays a
-# per-element JVM conversion — measured 3x end-to-end on the signature
-# stage. Shingle sets are NOT materialized at all — verification
-# re-shingles from text, which is ~4x smaller than its shingle set
-# (operators/lsh.verify_pairs).
-SIGNATURE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("minhash", BinaryType()),
-        StructField("simhash", LongType()),
-        StructField("n_shingles", LongType()),
-    ]
-)
-
-
 def compute_signatures(
     pages: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     id_col: str = "doc_id",
     text_col: str = "text",
-    include_shingles: bool = False,  # kept for API compat; ignored
     with_bands: bool = False,
     with_minhash: bool = True,
 ) -> DataFrame:
@@ -187,7 +170,15 @@ def compute_signatures(
     pass, so the pipeline can skip materializing the 1 KB/row minhash
     binary entirely (``with_minhash=False``): the 32 band hashes
     (256 B/row) are all LSH needs, and pair verification re-shingles from
-    text anyway. Cuts the signature stage's write+read bytes ~4x.
+    text. Cuts the signature stage's write+read bytes ~4x.
+
+    minhash travels as BINARY (raw little-endian uint64 bytes): Arrow
+    binary columns are a memcpy per row, while array<long> pays a
+    per-element JVM conversion — measured 3x end-to-end on the signature
+    stage. Shingle sets are not materialized: on the 60k-row synthetic
+    corpus a doc averages 254 distinct shingles (~2.0 KB as uint64
+    hashes) against ~2.4 KB of text, and verification re-shingles from
+    text (operators/lsh.verify_pairs).
     """
     # Sub-slice each Arrow batch so every temporary stays cache-resident:
     # measured 10x single-thread and ~4x at 32-way concurrency vs
@@ -222,7 +213,9 @@ def compute_signatures(
                 # column it never reads (guide §1.2: don't compute what
                 # you throw away)
                 mh = (
-                    minhash_batch(allsh, lengths, cfg)
+                    oph_signatures_segmented(
+                        allsh, lengths, cfg.minhash_perms, cfg.seed
+                    )
                     if (with_minhash or with_bands)
                     else None
                 )
@@ -251,35 +244,19 @@ def compute_signatures(
     return proj.mapInPandas(fn, schema)
 
 
-def make_band_hash_udf(cfg: DedupConfig = DEFAULT_CONFIG):
-    """bands×rows hashing of minhash binaries (numpy matrix per batch;
-    np.frombuffer on the binary column is zero-copy)."""
-    bands, rows, perms = cfg.bands, cfg.rows_per_band, cfg.minhash_perms
-
-    def _bands(minhash: pd.Series) -> pd.Series:
-        if len(minhash) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.frombuffer(
-            b"".join(minhash.values), dtype=np.uint64
-        ).reshape(len(minhash), perms)
-        bh = band_hashes(mat, bands, rows)
-        return pd.Series([row.view(np.int64) for row in bh])
-
-    return F.pandas_udf(_bands, ArrayType(LongType()))
-
-
 def explode_bands(signatures: DataFrame, cfg: DedupConfig = DEFAULT_CONFIG) -> DataFrame:
     """bands(band_id int, band_hash long, doc_id long) — the LSH index
     (SURVEY.md §1.3). ``posexplode`` plays the UDTF role (§2.10).
 
-    If the signatures already carry a precomputed ``bands`` array (the
-    fused kernel path, ``with_bands=True``), this is pure JVM explode —
-    no Python round-trip at all."""
-    if "bands" in signatures.columns:
-        return signatures.select(
-            "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
-        ).select("band_id", "band_hash", "doc_id")
-    udf = make_band_hash_udf(cfg)
+    The band hashes come precomputed from the signature kernel
+    (``compute_signatures(..., with_bands=True)``, which takes the band
+    layout from ``cfg``), so this is a pure JVM explode with no Python
+    round-trip."""
+    if "bands" not in signatures.columns:
+        raise ValueError(
+            "explode_bands needs the 'bands' column — compute the "
+            "signatures with compute_signatures(..., with_bands=True)"
+        )
     return signatures.select(
-        "doc_id", F.posexplode(udf("minhash")).alias("band_id", "band_hash")
+        "doc_id", F.posexplode("bands").alias("band_id", "band_hash")
     ).select("band_id", "band_hash", "doc_id")

@@ -93,19 +93,6 @@ def quality_score(text: str | Column = "text") -> Column:
     return F.round(len_ok * 0.4 + tok_ok * 0.2 + p_pen * 0.2 + d_pen * 0.2, 6)
 
 
-def lang_evidence(text: str | Column = "text", langs: tuple[str, ...] = ("en", "fr", "es", "de", "zh")) -> list[Column]:
-    """Per-language evidence counts. Profile here = token prefix match
-    (the synthetic corpus encodes language in its vocabulary); swap the
-    regex per deployment — the voting/argmax shape is what's exercised."""
-    c = F.col(text) if isinstance(text, str) else text
-    out = []
-    for lang in langs:
-        pattern = rf"\b{lang}w"
-        cnt = F.size(F.split(c, pattern)) - 1
-        out.append(F.greatest(cnt, F.lit(0)).alias(f"ev_{lang}"))
-    return out
-
-
 def lang_id(text: str | Column = "text", langs: tuple[str, ...] = ("en", "fr", "es", "de", "zh")) -> Column:
     """argmax over evidence counts; ties broken by lang order; 'und' if no
     evidence."""

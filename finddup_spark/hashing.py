@@ -8,8 +8,8 @@ north-rule "dup-pair recall >= 0.99 at the same config" hold at 1.0.
 
 The reference compares raw bytes (``finddup.py:225`` ``datachunks ==``);
 this module is the generalization of that equality test to hashes: token
-FNV-1a, polynomial shingle combine, splitmix64 finalization, and the
-(a*x + b) mod (2^61 - 1) MinHash permutation family (FIXTURES.md §4).
+FNV-1a, polynomial shingle combine, splitmix64 finalization, and
+one-permutation-hashing MinHash (FIXTURES.md §4).
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ from .config import MERSENNE_P
 
 _U64 = np.uint64
 _MASK64 = _U64(0xFFFFFFFFFFFFFFFF)
-_M61 = _U64(MERSENNE_P)
 
 # FNV-1a 64-bit constants.
 _FNV_OFFSET = 0xCBF29CE484222325
@@ -227,152 +226,6 @@ def shingle_hashes(token_hashes: np.ndarray, k: int) -> np.ndarray:
     return splitmix64(acc)
 
 
-# ---------------------------------------------------------------------------
-# (a*x + b) mod 2^61-1 — branch-free uint64 modular arithmetic
-# ---------------------------------------------------------------------------
-
-def _red61(x: np.ndarray) -> np.ndarray:
-    """One folding step: maps x < 2^64 to a value < 2^61 + 2^3, congruent
-    mod 2^61-1 (since 2^61 ≡ 1)."""
-    return (x & _M61) + (x >> _U64(61))
-
-
-def modmul61(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(a * b) mod (2^61 - 1) for uint64 arrays with a, b < 2^61.
-
-    Splits both operands at bit 31 so every partial product fits in 64
-    bits; uses 2^62 ≡ 2 and 2^61 ≡ 1 (mod 2^61-1) to fold. Fully
-    vectorized, broadcast-compatible.
-    """
-    a = np.asarray(a, dtype=np.uint64)
-    b = np.asarray(b, dtype=np.uint64)
-    a1 = a >> _U64(31)                  # < 2^30
-    a0 = a & _U64(0x7FFFFFFF)           # < 2^31
-    b1 = b >> _U64(31)                  # < 2^30
-    b0 = b & _U64(0x7FFFFFFF)           # < 2^31
-    hi = (a1 * b1) << _U64(1)           # a1*b1*2^62 ≡ 2*a1*b1 < 2^61
-    mid = a1 * b0 + a0 * b1             # < 2^62
-    # mid * 2^31 ≡ (mid >> 30) + (mid & (2^30-1)) << 31   (2^61 ≡ 1)
-    mid_red = (mid >> _U64(30)) + ((mid & _U64(0x3FFFFFFF)) << _U64(31))
-    lo = a0 * b0                        # < 2^62
-    s = _red61(hi) + _red61(mid_red) + _red61(lo)   # < 3 * 2^61 — no wrap
-    s = _red61(_red61(s))
-    return np.where(s >= _M61, s - _M61, s)
-
-
-def perm_hash61(x: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(a * (x mod p) + b) mod p, vectorized + broadcastable."""
-    x = np.asarray(x, dtype=np.uint64)
-    xm = np.where(x >= _M61, _red61(x), x)
-    xm = np.where(xm >= _M61, xm - _M61, xm)
-    t = modmul61(a, xm) + np.asarray(b, dtype=np.uint64)  # < 2^62
-    t = _red61(t)
-    return np.where(t >= _M61, t - _M61, t)
-
-
-def minhash_signature(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """MinHash signature of one shingle-hash set: sig[j] = min_x perm_j(x).
-
-    Empty shingle set -> all MERSENNE_P (sentinel that never collides with
-    a real min, so empty docs never pair with anything).
-    """
-    p = len(a)
-    if len(shingles) == 0:
-        return np.full(p, MERSENNE_P, dtype=np.uint64)
-    # (perms, n) broadcast matrix op — one matrix per doc, no Python loop.
-    m = perm_hash61(shingles[None, :], a[:, None], b[:, None])
-    return m.min(axis=1)
-
-
-def _perm_matrix_min(
-    x: np.ndarray, a: np.ndarray, b: np.ndarray, starts: np.ndarray
-) -> np.ndarray:
-    """Specialized segmented-min MinHash kernel.
-
-    Computes min over each segment of (a_j * x + b_j) mod 2^61-1 for all
-    perms j at once. The operand splits of x and a are hoisted out of the
-    (P × N) inner products (vs the generic modmul61: ~17 vector ops per
-    pair instead of ~27), and the matrix is built in shingle-axis chunks
-    so temporaries stay cache/memory-bounded regardless of batch size.
-    Returns (n_segments, P).
-    """
-    P, N = len(a), len(x)
-    # reduce x into [0, p) once
-    xm = _red61(x)
-    xm = np.where(xm >= _M61, xm - _M61, xm)
-    x1, x0 = xm >> _U64(31), xm & _U64(0x7FFFFFFF)
-    a1, a0 = (a >> _U64(31))[:, None], (a & _U64(0x7FFFFFFF))[:, None]
-    bb = b[:, None]
-    n_seg = len(starts)
-    out = np.full((P, n_seg), MERSENNE_P, dtype=np.uint64)
-    ends: np.ndarray | None = None
-
-    # small chunks keep the (P × CHUNK) temporaries L2-resident: this
-    # kernel is compute-dense (~17 uint64 ops/element), so cache
-    # residency is what lets 32 concurrent workers scale on a shared
-    # memory bus (measured: streaming-sized chunks cap at ~3x parallel
-    # speedup; cache-sized chunks follow core count)
-    CHUNK = 1 << 10
-    for lo in range(0, N, CHUNK):
-        hi_ = min(lo + CHUNK, N)
-        cx1, cx0 = x1[None, lo:hi_], x0[None, lo:hi_]
-        hi_t = (a1 * cx1) << _U64(1)                      # ≡ a1*x1*2^62, < 2^61
-        mid = a1 * cx0 + a0 * cx1                         # < 2^62
-        mid_red = (mid >> _U64(30)) + ((mid & _U64(0x3FFFFFFF)) << _U64(31))
-        s = _red61(hi_t) + _red61(mid_red) + _red61(a0 * cx0) + bb  # < 2^63
-        s = _red61(_red61(s))
-        s = np.where(s >= _M61, s - _M61, s)
-        # segments with >=1 element inside this chunk:
-        # seg i covers [starts[i], ends[i]); intersects iff start < hi_
-        # and end > lo (end > lo excludes empty leading slivers, so the
-        # clipped start list stays strictly increasing — reduceat-safe)
-        if ends is None:
-            ends = np.append(starts[1:], N)
-        mask = (starts < hi_) & (ends > lo)
-        idx = np.nonzero(mask)[0]
-        if len(idx):
-            seg_starts = np.clip(starts[idx] - lo, 0, hi_ - lo - 1)
-            mins = np.minimum.reduceat(s, seg_starts, axis=1)
-            out[:, idx] = np.minimum(out[:, idx], mins)
-    return out.T
-
-
-def minhash_batch(all_shingles: np.ndarray, lengths: np.ndarray, cfg) -> np.ndarray:
-    """Mode dispatch (cfg.minhash_mode): OPH (scale default) or the
-    classic 61-bit permutation family. Engine AND mirror oracle call this
-    one function — signature identity across the two is by construction."""
-    if cfg.minhash_mode == "oph":
-        return oph_signatures_segmented(
-            all_shingles, lengths, cfg.minhash_perms, cfg.seed
-        )
-    a, b = cfg.perm_params
-    return minhash_signatures_segmented(all_shingles, lengths, a, b)
-
-
-def minhash_signatures_segmented(
-    all_shingles: np.ndarray, lengths: np.ndarray, a: np.ndarray, b: np.ndarray
-) -> np.ndarray:
-    """Batch MinHash: signatures for many docs at once.
-
-    ``all_shingles`` is the concatenation of every doc's shingle hashes,
-    ``lengths[i]`` the count for doc i. One chunked (perms × N) modular
-    matrix op with segmented min — the Arrow-batch hot path (SURVEY.md §4:
-    "MinHash as one matrix-min per Arrow batch").
-    """
-    n_docs = len(lengths)
-    p = len(a)
-    out = np.full((n_docs, p), MERSENNE_P, dtype=np.uint64)
-    if len(all_shingles) == 0:
-        return out
-    nonzero = lengths > 0
-    offsets = np.zeros(n_docs, dtype=np.int64)
-    if n_docs > 1:
-        np.cumsum(lengths[:-1], out=offsets[1:])
-    starts = offsets[nonzero]
-    out[nonzero] = _perm_matrix_min(all_shingles, a, b, starts)
-    return out
-
-
 def oph_signatures_segmented(
     all_shingles: np.ndarray, lengths: np.ndarray, n_bins: int, seed: int
 ) -> np.ndarray:
@@ -382,11 +235,12 @@ def oph_signatures_segmented(
     the top bits, min per interval, empty intervals borrow circularly from
     the nearest filled one to the left.
 
-    O(N) total work vs O(perms × N) for the classic permutation family —
+    O(N) total work vs O(perms × N) for a classic k-permutation family —
     the 128× reduction that matters at 10^12 docs. Slightly higher
     estimator variance for sets ≪ n_bins; the engine verifies candidates
-    with exact Jaccard anyway, and the mirror oracle shares this exact
-    function, so recall accounting is unaffected.
+    with exact Jaccard anyway, and the mirror oracle calls this exact
+    function, so recall accounting is unaffected. A doc with no shingles
+    gets the ``MERSENNE_P`` sentinel in every bin.
     """
     assert n_bins & (n_bins - 1) == 0, "n_bins must be a power of two"
     shift = _U64(64 - int(n_bins).bit_length() + 1)

@@ -1,17 +1,15 @@
-"""Iterative connected-components cluster resolution (SURVEY.md §7 M5).
+"""Connected-components cluster resolution (SURVEY.md §7 M5).
 
 The reference assigns one shared id per dup group by insertion order
 (``create_file_ids``, ``finddup.py:1007-1047``); with fuzzy edges the dup
 relation is no longer transitive-by-construction, so clusters are the
-connected components of the verified-edge graph. Min-label propagation
-(hash-to-min): every vertex repeatedly adopts the minimum label in its
-neighborhood; converges in O(graph diameter) rounds — near-dup cluster
-diameters are tiny. ``localCheckpoint`` every few rounds truncates plan
-lineage (SURVEY.md §4 custom-(b)); convergence is detected with a
-``changed == 0`` aggregate. For pathological web-scale components
-(diameter ~ log n after star ops), swap in alternating large-star/
-small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — public algorithm); the driver loop is identical.
+connected components of the verified-edge graph. One method per size
+regime: a graph of at most ``driver_threshold`` edges is collected and
+solved with union-find on the driver; a larger one runs alternating
+large-star/small-star (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC'14 — public algorithm), O(log n) rounds
+regardless of component diameter, with ``localCheckpoint`` every few
+rounds to truncate plan lineage (SURVEY.md §4 custom-(b)).
 """
 
 from __future__ import annotations
@@ -23,11 +21,8 @@ from pyspark.sql import functions as F
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iters: int = 50,
-    checkpoint_every: int = 3,
     id_col: str = "doc_id",
     driver_threshold: int = 2_000_000,
-    algorithm: str = "star",
 ) -> DataFrame:
     """clusters(doc_id, cluster_id) — cluster_id = min doc_id in component.
 
@@ -39,11 +34,7 @@ def connected_components(
     ``driver_threshold`` edges is collected and solved with union-find on
     the driver in milliseconds — near-dup edge sets are tiny relative to
     the corpus even at 100 TB (edges ≈ dup pairs, not pages). Above the
-    threshold the distributed path runs: ``algorithm="star"`` (default)
-    is alternating large-star/small-star, O(log n) rounds regardless of
-    component diameter; ``algorithm="minlabel"`` is plain min-label
-    propagation, O(diameter) rounds — fine for tiny near-dup clusters,
-    pathological for chain-shaped mirror graphs.
+    threshold :func:`connected_components_star` runs.
     """
     edges = edges.persist()
     # limit-guarded collect: ONE action decides the strategy AND feeds
@@ -54,60 +45,24 @@ def connected_components(
     probe = edges.select("src", "dst").limit(driver_threshold + 1).collect()
     if len(probe) <= driver_threshold:
         out = _driver_cc(edges, vertices, id_col, rows=probe)
-        edges.unpersist()  # collected — the cache has served its purpose
-        return out
-    if algorithm == "star":
-        out = connected_components_star(
-            edges, vertices, max_iters=max_iters,
-            checkpoint_every=checkpoint_every, id_col=id_col,
-        )
-        edges.unpersist()
-        return out
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    )
-    touched = sym.select(F.col("a").alias(id_col)).distinct()
-    labels = touched.withColumn("label", F.col(id_col))
-
-    for it in range(max_iters):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed(id_col, "b"), "b")
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_min"))
-            .withColumnRenamed("a", id_col)
-        )
-        new_labels = (
-            labels.join(nbr_min, id_col, "left")
-            .select(
-                id_col,
-                F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
-                (F.col("label") != F.least(F.col("label"), F.coalesce("nbr_min", "label"))).alias("chg"),
-            )
-        )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.agg(F.sum(F.col("chg").cast("int"))).collect()[0][0] or 0
-        labels = new_labels.select(id_col, "label")
-        if changed == 0:
-            break
     else:
-        raise RuntimeError(
-            f"min-label CC did not converge in {max_iters} iterations "
-            f"({changed} labels still changing) — raise max_iters or use "
-            "algorithm='star' (O(log n) rounds)"
-        )
+        out = connected_components_star(edges, vertices, id_col=id_col)
+    edges.unpersist()  # both paths have run their actions
+    return out
 
-    result = labels.withColumnRenamed("label", "cluster_id")
-    if vertices is not None:
-        singles = (
-            vertices.select(F.col(id_col).cast("long").alias(id_col))
-            .join(result, id_col, "left_anti")
-            .withColumn("cluster_id", F.col(id_col))
-        )
-        result = result.unionByName(singles)
-    return result
+
+def _with_singletons(
+    result: DataFrame, vertices: DataFrame | None, id_col: str
+) -> DataFrame:
+    """Append every vertex without a label as its own cluster."""
+    if vertices is None:
+        return result
+    singles = (
+        vertices.select(F.col(id_col).cast("long").alias(id_col))
+        .join(result, id_col, "left_anti")
+        .withColumn("cluster_id", F.col(id_col))
+    )
+    return result.unionByName(singles)
 
 
 def _driver_cc(
@@ -161,21 +116,14 @@ def _driver_cc(
                 F.col(id_col).cast("long").alias("cluster_id"),
             )
         result = spark.createDataFrame([], f"{id_col} long, cluster_id long")
-    if vertices is not None:
-        singles = (
-            vertices.select(F.col(id_col).cast("long").alias(id_col))
-            .join(result, id_col, "left_anti")
-            .withColumn("cluster_id", F.col(id_col))
-        )
-        result = result.unionByName(singles)
-    return result
+    return _with_singletons(result, vertices, id_col)
 
 
 def connected_components_star(
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    max_iters: int = 30,
-    checkpoint_every: int = 2,
+    max_iters: int = 50,
+    checkpoint_every: int = 3,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Alternating large-star / small-star connected components
@@ -306,11 +254,4 @@ def connected_components_star(
     result = labels.unionByName(roots).groupBy(id_col).agg(
         F.min("cluster_id").alias("cluster_id")
     )
-    if vertices is not None:
-        singles = (
-            vertices.select(F.col(id_col).cast("long").alias(id_col))
-            .join(result, id_col, "left_anti")
-            .withColumn("cluster_id", F.col(id_col))
-        )
-        result = result.unionByName(singles)
-    return result
+    return _with_singletons(result, vertices, id_col)

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from ..config import DEFAULT_CONFIG, DedupConfig
 from ..functions.signatures import compute_signatures, explode_bands
+from ..session import start_driver_threads
 from .cc import connected_components
 from .exact import exact_clusters
 from .lsh import (
@@ -115,21 +116,7 @@ def minhash_dedup(
     generator (where the round-4 within-shard all-pairs would pay
     ~n·cap/2 verify pairs for content that is equal by construction)."""
     caches: list = []
-    star0, rep_docs = exact_text_collapse(
-        docs, id_col=id_col, text_col=text_col, cache_handles=caches
-    )
-    # fused kernel (same as the pipeline's signature stage): band hashes
-    # computed in the ONE mapInPandas pass, so explode_bands below is pure
-    # JVM posexplode — no second Python boundary crossing to band-hash the
-    # minhash binary, and the cache holds 256 B/row of bands instead of
-    # the 1 KB/row minhash nobody reads (guide §4.1)
-    sigs = compute_signatures(
-        rep_docs, cfg, id_col=id_col, text_col=text_col,
-        with_bands=True, with_minhash=False,
-    ).persist()
-    caches.append(sigs)
-    pairs, stats = candidate_pairs(explode_bands(sigs, cfg), cfg, cache_handles=caches)
-    edges = verify_pairs(pairs, rep_docs, cfg, id_col=id_col, text_col=text_col)
+    star0, edges, stats = _minhash_text_edges(docs, cfg, id_col, text_col, caches)
     if oracle_guard:
         edges = edges.persist()
         caches.append(edges)
@@ -152,12 +139,55 @@ def minhash_dedup(
                 "risk is no longer negligible; the exhaustive-Jaccard SQL "
                 "oracle may diverge on this corpus"
             )
-    # vertices from the cheap id scan, NOT the signature table: CC runs
-    # its actions eagerly, so the signature/band caches can be dropped
-    # here — standalone calls no longer leak them until session clearCache
+    return _resolve_clusters(
+        star0.unionByName(edges.select("src", "dst")), docs, id_col, caches
+    )
+
+
+def _minhash_text_edges(
+    docs: DataFrame,
+    cfg: DedupConfig,
+    id_col: str,
+    text_col: str,
+    caches: list,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(star0, edges, stats) — the MinHash text chain of
+    :func:`minhash_dedup` and :func:`cross_modal_dedup`'s text tier:
+    exact-text collapse → fused signatures → bands → candidate pairs →
+    exact-Jaccard verify (the signature → filter → verify decomposition).
+    ``star0`` links each exact-dup group to its representative, ``edges``
+    are the verified rep-to-rep pairs, ``stats`` the hot-bucket
+    truncation row. Every persisted intermediate is appended to
+    ``caches`` for the caller to release."""
+    star0, rep_docs = exact_text_collapse(
+        docs, id_col=id_col, text_col=text_col, cache_handles=caches
+    )
+    # fused kernel (same as the pipeline's signature stage): band hashes
+    # computed in the ONE mapInPandas pass, so explode_bands below is pure
+    # JVM posexplode — no second Python boundary crossing to band-hash the
+    # minhash binary, and the cache holds 256 B/row of bands instead of
+    # the 1 KB/row minhash nobody reads (guide §4.1)
+    sigs = compute_signatures(
+        rep_docs, cfg, id_col=id_col, text_col=text_col,
+        with_bands=True, with_minhash=False,
+    ).persist()
+    caches.append(sigs)
+    pairs, stats = candidate_pairs(explode_bands(sigs, cfg), cfg, cache_handles=caches)
+    edges = verify_pairs(pairs, rep_docs, cfg, id_col=id_col, text_col=text_col)
+    return star0, edges, stats
+
+
+def _resolve_clusters(
+    edges: DataFrame, docs: DataFrame, id_col: str, caches: list
+) -> DataFrame:
+    """The shared tail of every dedup entry point: connected components
+    over ``edges`` (src, dst) with every ``docs`` id as a vertex, then
+    release ``caches``, then (id, cluster_id, keep). CC runs its actions
+    eagerly, so the caches can be dropped before the result is consumed
+    — standalone calls do not leak them until a session clearCache."""
     cl = connected_components(
-        star0.unionByName(edges.select("src", "dst")),
-        vertices=docs.select(F.col(id_col).alias("doc_id")),
+        edges.select("src", "dst"),
+        vertices=docs.select(F.col(id_col).cast("long").alias("doc_id")),
     )
     for h in caches:
         h.unpersist()
@@ -174,18 +204,13 @@ def simhash_dedup(
     cfg: DedupConfig = DEFAULT_CONFIG,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_blocks: int | None = None,
-    auto_widen: bool = True,
 ) -> DataFrame:
     """SimHash dedup: Hamming-ball clustering via bit-chunk pigeonhole
-    (or Manku wide-key block tables when ``n_blocks`` is set — see
-    :func:`~finddup_spark.operators.lsh.simhash_candidate_pairs`; the
-    verified edge set, and therefore the clustering, is identical).
+    (:func:`~finddup_spark.operators.lsh.simhash_candidate_pairs`).
 
     No silent caps, and no silent RECALL loss either: when the chunk
-    path star-truncated any hot bucket (``auto_widen=True``, the
-    default), the members of exactly those buckets are re-keyed through
-    the Manku wide-key block tables
+    path star-truncated any hot bucket, the members of exactly those
+    buckets are re-keyed through the Manku wide-key block tables
     (:func:`~finddup_spark.operators.lsh.simhash_widen_edges`) and the
     recovered Hamming edges union into the cluster graph before CC —
     truncation loss is strictly within-bucket, so the subset pass is
@@ -202,46 +227,31 @@ def simhash_dedup(
     # the 128-bin OPH minhash pass and its 1 KB/row binary entirely
     # (guide §1.2 — this tier never read either)
     sigs = compute_signatures(
-        docs, cfg, id_col=id_col, text_col=text_col, include_shingles=False,
-        with_minhash=False,
+        docs, cfg, id_col=id_col, text_col=text_col, with_minhash=False,
     ).persist()
     caches: list = [sigs]
-    cand, stats, trunc_fp = simhash_candidate_pairs(
+    edges, stats, trunc_fp = simhash_candidate_pairs(
         sigs, hamming_radius=hamming_radius, cfg=cfg, cache_handles=caches,
-        n_blocks=n_blocks, return_truncated=True,
+        return_truncated=True,
     )
     # the widen decision needs the truncation stats BEFORE CC; they are
     # cheap HERE because the generator's hot-bucket probe has already
     # materialized the keyed bucket cache the stats aggregate over — no
     # extra materialization of the pair stream is needed
     srow = stats.collect()[0]
-    edges, wstats = cand, None
     if (srow["pairs_truncated_upper_bound"] or 0) > 0:
-        if auto_widen and n_blocks is None:
-            log.warning(
-                "simhash_dedup: %d hot chunk bucket(s) star-truncated "
-                "(max bucket %d, skipped-pair upper bound %d) — widening "
-                "those buckets through Manku n_blocks=6 wide-key tables",
-                srow["hot_buckets"], srow["max_bucket"],
-                srow["pairs_truncated_upper_bound"],
-            )
-            wide, wstats = simhash_widen_edges(
-                trunc_fp, hamming_radius=hamming_radius, cfg=cfg,
-                cache_handles=caches, return_stats=True,
-            )
-            edges = cand.unionByName(wide)
-        else:
-            log.warning(
-                "simhash_dedup: %d hot chunk bucket(s) truncated (max "
-                "bucket %d, skipped-pair upper bound %d) — recall within "
-                "those buckets is star-limited",
-                srow["hot_buckets"], srow["max_bucket"],
-                srow["pairs_truncated_upper_bound"],
-            )
-    cl = connected_components(
-        edges.select("src", "dst"), vertices=docs.select(F.col(id_col).alias("doc_id"))
-    )
-    if wstats is not None:
+        log.warning(
+            "simhash_dedup: %d hot chunk bucket(s) star-truncated "
+            "(max bucket %d, skipped-pair upper bound %d) — widening "
+            "those buckets through Manku n_blocks=6 wide-key tables",
+            srow["hot_buckets"], srow["max_bucket"],
+            srow["pairs_truncated_upper_bound"],
+        )
+        wide, wstats = simhash_widen_edges(
+            trunc_fp, hamming_radius=hamming_radius, cfg=cfg,
+            cache_handles=caches, return_stats=True,
+        )
+        edges = edges.unionByName(wide)
         wsrow = wstats.collect()[0]
         if (wsrow["pairs_truncated_upper_bound"] or 0) > 0:
             log.warning(
@@ -250,13 +260,7 @@ def simhash_dedup(
                 "star-limited recall",
                 wsrow["hot_buckets"], wsrow["pairs_truncated_upper_bound"],
             )
-    for h in caches:
-        h.unpersist()
-    return cl.select(
-        F.col("doc_id").alias(id_col),
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-    )
+    return _resolve_clusters(edges, docs, id_col, caches)
 
 
 def token_jaccard_pairs(
@@ -362,34 +366,23 @@ def embedding_lsh_dedup(
         embeddings, dim, threshold, n_planes, n_tables, seed,
         id_col, vec_col, cfg, cache_handles=caches,
     )
-    if oracle_guard:
-        srow = stats.collect()[0]
-        if (srow["hot_buckets"] or 0) > 0:
-            raise RuntimeError(
-                "embedding_lsh_dedup oracle guard: "
-                f"{srow['hot_buckets']} hot bucket(s) star-truncated — the "
-                "exhaustive all-pairs SQL oracle is not sound for this corpus"
-            )
-    verts = embeddings.select(F.col(id_col).cast("long").alias("doc_id"))
-    cl = connected_components(edges.select("src", "dst"), vertices=verts)
+    # collected BEFORE CC releases the bucket cache — consumed after the
+    # release it would recompute the whole index
+    srow = stats.collect()[0] if (oracle_guard or return_stats) else None
+    if oracle_guard and (srow["hot_buckets"] or 0) > 0:
+        raise RuntimeError(
+            "embedding_lsh_dedup oracle guard: "
+            f"{srow['hot_buckets']} hot bucket(s) star-truncated — the "
+            "exhaustive all-pairs SQL oracle is not sound for this corpus"
+        )
+    out = _resolve_clusters(edges, embeddings, id_col, caches)
     if return_stats:
-        # materialize while the bucket cache is still alive — consumed
-        # after the unpersist below it would recompute the whole index.
         # Explicit schema: an empty input leaves NULL aggregate fields
         # that schema inference cannot type.
         from .lsh import _local_row_df
 
-        stats = _local_row_df(
-            embeddings.sparkSession, stats.collect()[0], stats.schema
-        )
-    for h in caches:
-        h.unpersist()
-    out = cl.select(
-        F.col("doc_id").alias(id_col),
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-    )
-    return (out, stats) if return_stats else out
+        return out, _local_row_df(embeddings.sparkSession, srow, stats.schema)
+    return out
 
 
 def embedding_lsh_edges(
@@ -507,77 +500,39 @@ def cross_modal_dedup(
     ``oracle_guard=True`` asserts NEITHER tier star-truncated a hot
     bucket — the precondition for the exhaustive union-edge SQL oracle.
     """
-    # exact-text collapse: one representative doc per sha256(text) — the
-    # same one-shuffle window-min idiom as the vector collapse (and
-    # exact.py's cluster window); NULL texts dropped first so they emit
-    # no edges
-    import threading
-
+    # the TEXT tier (exact-text collapse → signatures → LSH bands →
+    # verify) and the EMBEDDING tier (hyperplane buckets → cosine verify)
+    # are data-independent, so each materializes its verified edge set on
+    # its own driver thread — the same concurrent-job-group idiom the
+    # DedupPipeline uses for its minhash/substring tiers. On a cluster the
+    # two job groups share the executors work-conservingly; locally the
+    # win is that one tier's driver-side scheduling/AQE-planning gaps
+    # overlap the other tier's compute (measured ~1.5x on this operator's
+    # wall at bench scale, where the per-tier job count, not data volume,
+    # dominates).
     caches: list = []
-    text_star, rep_docs = exact_text_collapse(
-        docs, id_col=id_col, text_col=text_col, cache_handles=caches
-    )
-
-    # the TEXT tier (signatures → LSH bands → verify) and the EMBEDDING
-    # tier (hyperplane buckets → cosine verify) are data-independent, so
-    # each materializes its verified edge set on its own driver thread —
-    # the same concurrent-job-group idiom the DedupPipeline uses for its
-    # minhash/substring tiers. On a cluster the two job groups share the
-    # executors work-conservingly; locally the win is that one tier's
-    # driver-side scheduling/AQE-planning gaps overlap the other tier's
-    # compute (measured ~1.5x on this operator's wall at bench scale,
-    # where the per-tier job count, not data volume, dominates).
     box: dict[str, DataFrame] = {}
-    errs: list[BaseException] = []
 
     def _text_tier() -> None:
-        # fused kernel: bands in the signature pass, JVM-only explode
-        # (same rationale as minhash_dedup — guide §4.1)
-        sigs = compute_signatures(
-            rep_docs, cfg, id_col=id_col, text_col=text_col,
-            with_bands=True, with_minhash=False,
-        ).persist()
-        caches.append(sigs)
-        pairs, tstats = candidate_pairs(
-            explode_bands(sigs, cfg), cfg, cache_handles=caches
+        star, te, box["tstats"] = _minhash_text_edges(
+            docs, cfg, id_col, text_col, caches
         )
-        te = (
-            verify_pairs(pairs, rep_docs, cfg, id_col=id_col, text_col=text_col)
-            .select("src", "dst")
-            .persist()
-        )
+        te = te.select("src", "dst").persist()
         caches.append(te)
         te.count()
-        box["text_edges"], box["tstats"] = te, tstats
+        box["text_edges"] = star.unionByName(te)
 
     def _vec_tier() -> None:
-        ve, vstats = embedding_lsh_edges(
+        ve, box["vstats"] = embedding_lsh_edges(
             embeddings, dim, cosine_threshold,
             id_col=vec_id_col, vec_col=vec_col, cache_handles=caches,
         )
         vep = ve.select("src", "dst").persist()
         caches.append(vep)
         vep.count()
-        box["vec_edges"], box["vstats"] = vep, vstats
+        box["vec_edges"] = vep
 
-    def _guard(fn):
-        def inner():
-            try:
-                fn()
-            except BaseException as e:  # re-raised on the main thread
-                errs.append(e)
-        return inner
-
-    threads = [
-        threading.Thread(target=_guard(_text_tier), name="cm-text"),
-        threading.Thread(target=_guard(_vec_tier), name="cm-vec"),
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errs:
-        raise errs[0]
+    start_driver_threads(_text_tier, _vec_tier)()
     if oracle_guard:
         for tier, stats in (("text", box["tstats"]), ("embedding", box["vstats"])):
             srow = stats.collect()[0]
@@ -587,17 +542,8 @@ def cross_modal_dedup(
                     f"star-truncated {srow['hot_buckets']} hot bucket(s) — "
                     "the exhaustive union-edge SQL oracle is not sound here"
                 )
-    edges = text_star.unionByName(box["text_edges"]).unionByName(box["vec_edges"])
-    cl = connected_components(
-        edges, vertices=docs.select(F.col(id_col).cast("long").alias("doc_id"))
-    )
-    for h in caches:
-        h.unpersist()
-    return cl.select(
-        F.col("doc_id").alias(id_col),
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-    )
+    edges = box["text_edges"].unionByName(box["vec_edges"])
+    return _resolve_clusters(edges, docs, id_col, caches)
 
 
 def embedding_cosine_dedup(
@@ -640,10 +586,4 @@ def embedding_cosine_dedup(
     )
     sim = cosine_expr("va", "vb", "na", "nb")
     edges = pairs.select("src", "dst", sim.alias("cos")).filter(F.col("cos") >= threshold)
-    verts = embeddings.select(F.col(id_col).cast("long").alias("doc_id"))
-    cl = connected_components(edges.select("src", "dst"), vertices=verts)
-    return cl.select(
-        F.col("doc_id").alias(id_col),
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-    )
+    return _resolve_clusters(edges, embeddings, id_col, [])

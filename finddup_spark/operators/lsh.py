@@ -27,9 +27,8 @@ handling:
 
 Verification computes the EXACT shingle Jaccard by re-shingling the two
 candidate texts per Arrow batch (vectorized numpy — see
-:func:`verify_pairs`): text is ~4x smaller than its materialized shingle
-array, so re-shingling at verify time beats carrying shingle arrays
-through every shuffle.
+:func:`verify_pairs`), so only text, never shingle arrays, travels
+through the shuffles.
 """
 
 from __future__ import annotations
@@ -68,7 +67,6 @@ def candidate_pairs(
     payload_col: str | None = None,
     pair_predicate=None,
     return_truncated: bool = False,
-    bounded_keyspace: bool = False,
     eager_stats: bool = False,
 ):
     """(pairs, stats) — pairs(src, dst) with src < dst, distinct across
@@ -103,28 +101,8 @@ def candidate_pairs(
     # table twice more); the persisted window output keeps its
     # (band_id, band_hash) partitioning, so the small/hot self-joins
     # below reuse it instead of re-shuffling.
-    #
-    # ``bounded_keyspace``: when the band-hash domain is small by
-    # construction (the SimHash 16-bit chunk tables: <= 4*65536 distinct
-    # buckets regardless of corpus size), bucket sizes come from a
-    # map-side-combined groupBy (shuffle volume = |keyspace|, not |rows|)
-    # broadcast-joined back — the full-band-table exchange AND its sort
-    # disappear; the self-joins below then shuffle only the >= 2-member
-    # survivors (at 16-bit keys most buckets are singletons until the
-    # corpus dwarfs the keyspace). Never set this for unbounded hashes —
-    # the broadcast would scale with the corpus.
-    if bounded_keyspace:
-        sizes_small = bands.groupBy("band_id", "band_hash").agg(
-            F.count(F.lit(1)).alias("bucket_size")
-        )
-        keyed = bands.join(
-            F.broadcast(sizes_small), ["band_id", "band_hash"]
-        ).persist()
-    else:
-        w = Window.partitionBy("band_id", "band_hash")
-        keyed = bands.withColumn(
-            "bucket_size", F.count(F.lit(1)).over(w)
-        ).persist()
+    w = Window.partitionBy("band_id", "band_hash")
+    keyed = bands.withColumn("bucket_size", F.count(F.lit(1)).over(w)).persist()
     if cache_handles is not None:
         cache_handles.append(keyed)
 
@@ -343,11 +321,11 @@ def verify_pairs(
     the generalization of the reference's chunk-equality check
     (finddup.py:225) to set similarity.
 
-    Joins candidate pairs back to TEXT (text is ~4x smaller than its
-    materialized shingle set, so re-shingling at verify time beats
-    carrying shingle arrays through every shuffle) and computes the
-    exact Jaccard per Arrow batch: one vectorized batch-shingling of the
-    src+dst texts, then a sorted-set numpy intersection per pair.
+    Joins candidate pairs back to TEXT and computes the exact Jaccard per
+    Arrow batch: one vectorized batch-shingling of the src+dst texts, then
+    a sorted-set numpy intersection per pair. (On the 60k-row synthetic
+    corpus a doc averages ~2.4 KB of text and 254 distinct shingles,
+    ~2.0 KB as uint64 hashes.)
     """
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -493,8 +471,8 @@ def simhash_widen_edges(
     ``trunc_fp`` and share at least one of the C(n_blocks, n_blocks - r)
     block keys (pigeonhole). Cost is subset-sized (hot buckets are a
     fraction of a corpus, and the ~32-bit keys disperse them), so the
-    default chunk path keeps its wall while hot-bucket recall stops
-    depending on a manual ``n_blocks`` flag."""
+    default chunk path keeps its wall while hot-bucket recall needs no
+    flag."""
     bands = simhash_block_bands(trunc_fp, n_blocks, hamming_radius)
     pairs, stats = candidate_pairs(
         bands,
@@ -515,22 +493,19 @@ def simhash_widen_edges(
 def simhash_candidate_pairs(
     signatures: DataFrame,
     hamming_radius: int = 3,
-    n_chunks: int = 4,
     cfg: DedupConfig = DEFAULT_CONFIG,
     cache_handles: list | None = None,
     return_stats: bool = False,
-    n_blocks: int | None = None,
     return_truncated: bool = False,
 ):
     """SimHash near-dup candidates by pivoted exact-match on bit-chunks.
 
-    Pigeonhole: two 64-bit fingerprints within Hamming distance
-    r <= n_chunks - 1 share at least one of the n_chunks equal-width
-    chunks, so radius 3 needs only 4 chunks of 16 bits — 65,536 distinct
-    values per chunk index (the previous 8×8-bit split gave 256 values per
-    chunk, i.e. ~N/256 docs per bucket and an O(N²/256) self-join at
-    scale). Exact-match join per chunk index — the multi-index strategy
-    from SURVEY.md §2.3, no theta join.
+    Pigeonhole: two 64-bit fingerprints within Hamming distance r <= 3
+    share at least one of 4 equal-width chunks of 16 bits — 65,536
+    distinct values per chunk index (the previous 8×8-bit split gave 256
+    values per chunk, i.e. ~N/256 docs per bucket and an O(N²/256)
+    self-join at scale). Exact-match join per chunk index — the
+    multi-index strategy from SURVEY.md §2.3, no theta join.
 
     Two stages, so identical fingerprints always share one representative:
 
@@ -550,14 +525,16 @@ def simhash_candidate_pairs(
        Hamming distances are identical. The only residual recall loss is a
        hot bucket of >cfg.hot_bucket_cap DISTINCT fingerprints sharing a
        16-bit chunk; its skipped-pair upper bound is in the returned stats
-       (``return_stats=True``) and callers on production paths must log it
-       (no silent caps) — :func:`finddup_spark.operators.dedup.simhash_dedup`
-       does.
+       (``return_stats=True``), and ``return_truncated=True`` also returns
+       the members of those buckets, which
+       :func:`finddup_spark.operators.dedup.simhash_dedup` re-keys through
+       :func:`simhash_widen_edges` to recover the loss.
 
     Returns edges(src, dst, hamming); with ``return_stats=True`` returns
     (edges, stats) where stats is the one-row skew/truncation DataFrame
     from :func:`candidate_pairs` (computed over distinct-fingerprint
-    buckets).
+    buckets); with ``return_truncated=True`` returns (edges, stats,
+    truncated members).
 
     The all-pairs bucket limit is TIGHTENED to 8·hot_bucket_cap here
     (vs the text tier's cfg.allpairs_bucket_limit): correlated corpora
@@ -567,26 +544,11 @@ def simhash_candidate_pairs(
     paying n·cap/2 Hamming probes per such bucket tripled this query's
     wall. Buckets up to 512 keep full within-shard all-pairs (strictly
     MORE recall than the round-3 all-star policy at every size); larger
-    ones take the O(n) star with the skipped count in stats. The
-    documented production upgrade when radius-3 recall inside mega
-    chunk-buckets matters is wider keys — implemented as the
-    ``n_blocks`` option below.
-
-    ``n_blocks`` (e.g. 6 for radius 3) switches candidate generation to
-    the Manku wide-key block-combination tables from
-    :func:`simhash_block_keys` — C(n_blocks, n_blocks-r) tables keyed on
-    ~32 bits instead of 4 tables keyed on 16, which removes the hot
-    chunk-bucket tail on correlated corpora at 5x band-table rows.
-    Measured tradeoff at 1.09M pages, local[32]: chunks ~28s end-to-end
-    vs blocks ~44s (the 5x band explode+window outweighs the dissolved
-    hot tail once mega-buckets are star-capped anyway) — so chunks stay
-    the DEFAULT and blocks are the recall-first choice when Hamming
-    pairs inside mega chunk-buckets must not be star-truncated (blocks
-    leave ZERO truncation on such corpora; see
-    tests/test_fuzzy.py::test_simhash_block_tables_vs_brute_force).
+    ones take the O(n) star with the skipped count in stats.
     """
     from dataclasses import replace as _replace
 
+    n_chunks = 4
     assert hamming_radius <= n_chunks - 1
     cfg = _replace(
         cfg,
@@ -611,30 +573,21 @@ def simhash_candidate_pairs(
     )
     distinct_fp = reps.select(F.col("rep").alias("doc_id"), "simhash")
 
-    if n_blocks is not None:
-        # Manku wide-key tables: one per (n_blocks - r)-combination of
-        # near-equal bit blocks, keyed on their concatenation (~32 bits
-        # at B=6, r=3) — bucket occupancy shrinks by ~2^(key_bits - 16)
-        # vs the chunk scheme, removing the hot tail on correlated
-        # fingerprint spaces
-        assert n_blocks > hamming_radius
-        chunks = simhash_block_bands(distinct_fp, n_blocks, hamming_radius)
-    else:
-        width = 64 // n_chunks
-        structs = [
-            F.struct(
-                F.lit(i).alias("band_id"),
-                F.shiftrightunsigned(F.col("simhash"), i * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("band_hash"),
-            )
-            for i in range(n_chunks)
-        ]
-        chunks = distinct_fp.select(
-            "doc_id",
-            "simhash",
-            F.explode(F.array(*structs)).alias("c"),
-        ).select("doc_id", "simhash", F.col("c.band_id"), F.col("c.band_hash"))
+    width = 64 // n_chunks
+    structs = [
+        F.struct(
+            F.lit(i).alias("band_id"),
+            F.shiftrightunsigned(F.col("simhash"), i * width)
+            .bitwiseAND(F.lit((1 << width) - 1))
+            .alias("band_hash"),
+        )
+        for i in range(n_chunks)
+    ]
+    chunks = distinct_fp.select(
+        "doc_id",
+        "simhash",
+        F.explode(F.array(*structs)).alias("c"),
+    ).select("doc_id", "simhash", F.col("c.band_id"), F.col("c.band_hash"))
 
     # the fingerprint IS the payload (8 bytes): the Hamming verification
     # runs INSIDE the pair generator, before the cross-band distinct —
@@ -653,11 +606,6 @@ def simhash_candidate_pairs(
         # decision in simhash_dedup) — eager_stats merges the hot-bucket
         # probe into that one aggregate, saving a full action per call
         eager_stats=True,
-        # the 16-bit chunk keys would allow bounded_keyspace=True, but an
-        # interleaved A/B at the bench corpus measured the broadcast path
-        # SLOWER (4.5s vs 3.6s, +4 jobs: the agg + broadcast exchange cost
-        # more than the window they replace), so the window stays default;
-        # the option remains for corpora that dwarf the keyspace
     )
     pairs, stats = out[0], out[1]
     rep_edges = pairs.select(

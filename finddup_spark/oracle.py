@@ -21,7 +21,7 @@ from .config import DEFAULT_CONFIG, DedupConfig
 from .hashing import (
     band_hashes,
     hash_utf8_array,
-    minhash_batch,
+    oph_signatures_segmented,
     rolling_gram_hashes,
     shingle_hashes,
     simhash64,
@@ -87,7 +87,9 @@ def run_oracle(
         doc_id = int(doc_id)
         u, w = doc_shingles(text, cfg)
         sets[doc_id] = set(int(x) for x in u)
-        sig = minhash_batch(u, np.array([len(u)]), cfg)[0]
+        sig = oph_signatures_segmented(
+            u, np.array([len(u)]), cfg.minhash_perms, cfg.seed
+        )[0]
         sigs[doc_id] = sig
         simhashes[doc_id] = simhash64(u, w)
         bh = band_hashes(sig[None, :], cfg.bands, cfg.rows_per_band)[0]

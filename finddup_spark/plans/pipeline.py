@@ -44,6 +44,7 @@ from ..operators.substring import (
     substring_candidates,
     verify_substring_pairs,
 )
+from ..session import start_driver_threads
 
 LINEAGE_SCHEMA = (
     "stage string, partition_id int, rows long, wall_ms long, status string"
@@ -197,8 +198,6 @@ class DedupPipeline:
     # -- the pipeline ----------------------------------------------------
 
     def run(self, pages: DataFrame) -> PipelineRun:
-        import threading
-
         run = PipelineRun(self.out_dir)
         cfg = self.cfg
         kept, ignored = split_ignored(pages) if "url" in pages.columns else (pages, None)
@@ -215,7 +214,6 @@ class DedupPipeline:
         # the exact tier's compute instead of extending the serial floor.
         id_cols = [c for c in ("doc_id", "url") if c in kept.columns]
         err_box: dict[str, DataFrame] = {}
-        err_errs: list[BaseException] = []
 
         def _errors_tier() -> None:
             err_box["df"] = self._write_stage(
@@ -236,14 +234,7 @@ class DedupPipeline:
                 os.makedirs(self._path("errors_lineage"), exist_ok=True)
                 open(os.path.join(self._path("errors_lineage"), "_SUCCESS"), "w").close()
 
-        def _err_guard() -> None:
-            try:
-                _errors_tier()
-            except BaseException as e:
-                err_errs.append(e)
-
-        err_thread = threading.Thread(target=_err_guard, name="errors-tier")
-        err_thread.start()
+        join_errors_tier = start_driver_threads(_errors_tier)
 
         # stage: exact clusters (every valid page)
         exact = self._write_stage(
@@ -262,7 +253,8 @@ class DedupPipeline:
 
         # fused kernel: band hashes computed in the same pass; the 1 KB/row
         # minhash binary is never materialized (bands are all LSH needs,
-        # and verification re-shingles from text) — ~4x fewer stage bytes.
+        # and verification re-shingles from text) — the 256 B/row of band
+        # hashes is a quarter of the minhash binary's stage bytes.
         # No repartition before write: no downstream consumer joins on
         # doc_id distribution (bands re-shuffles by band key).
         sigs = self._write_stage(
@@ -325,7 +317,6 @@ class DedupPipeline:
 
         mh_box: dict[str, DataFrame] = {}
         sub_box: dict[str, DataFrame] = {}
-        errs: list[BaseException] = []
 
         def _mh_tier() -> None:
             pairs, stats = candidate_pairs(bands, cfg)
@@ -350,34 +341,8 @@ class DedupPipeline:
                 run, "edges_work/sub_pairs", lambda: sub_pairs_df
             )
 
-        def _guard(fn):
-            def inner():
-                try:
-                    fn()
-                except BaseException as e:  # re-raised on the main thread
-                    errs.append(e)
-            return inner
-
-        import threading
-
-        threads = [threading.Thread(target=_guard(_mh_tier), name="mh-tier")]
-        if self.enable_substring:
-            threads.append(threading.Thread(target=_guard(_sub_tier), name="sub-tier"))
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            # surface EVERY tier's failure, not just the first: secondary
-            # exceptions chain via __context__ (visible in the traceback)
-            primary = errs[0]
-            ctx = primary
-            for other in errs[1:]:
-                while ctx.__context__ is not None:
-                    ctx = ctx.__context__
-                ctx.__context__ = other
-                ctx = other
-            raise primary
+        tiers = [_mh_tier] + ([_sub_tier] if self.enable_substring else [])
+        start_driver_threads(*tiers)()
 
         mh_edges = mh_box["edges"]
         sub_edges = None
@@ -449,9 +414,7 @@ class DedupPipeline:
 
         # the errors tier ran concurrently since the top of run(); its
         # output is only needed from here on (dirs leaf rows)
-        err_thread.join()
-        if err_errs:
-            raise err_errs[0]
+        join_errors_tier()
         errors_df = err_box["df"]
 
         if "url" in pages.columns:

@@ -12,6 +12,8 @@ Settings chosen for the 100 TB target, not just the sandbox:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -39,6 +41,48 @@ def ensure_min_partitions(df):
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+def start_driver_threads(*tiers: Callable[[], None]) -> Callable[[], None]:
+    """Start each independent tier on its own driver thread and return
+    ``join``: it waits for every tier, then re-raises every failure — the
+    first as the raised exception, the others chained through
+    ``__context__`` so all of them show in the traceback.
+
+    Spark jobs submitted from driver threads run concurrently (PySpark
+    pins each Python thread to a JVM thread), so one tier's scheduling
+    and commit gaps overlap another tier's compute. Calling ``join``
+    later than the start lets a tier overlap the caller's own work."""
+    errs: list[BaseException] = []
+
+    def guarded(fn: Callable[[], None]) -> Callable[[], None]:
+        def run() -> None:
+            try:
+                fn()
+            except BaseException as e:  # re-raised by join()
+                errs.append(e)
+        return run
+
+    threads = [
+        threading.Thread(target=guarded(fn), name=fn.__name__.strip("_"))
+        for fn in tiers
+    ]
+    for t in threads:
+        t.start()
+
+    def join() -> None:
+        for t in threads:
+            t.join()
+        if errs:
+            primary = ctx = errs[0]
+            for other in errs[1:]:
+                while ctx.__context__ is not None:
+                    ctx = ctx.__context__
+                ctx.__context__ = other
+                ctx = other
+            raise primary
+
+    return join
 
 
 def get_spark(

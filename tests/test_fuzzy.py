@@ -37,7 +37,7 @@ def _cluster_pairs(assign: dict[int, int]) -> set[tuple[int, int]]:
 @pytest.fixture(scope="module")
 def fuzzy(spark, tiny_corpus):
     pages = load_pages(spark, tiny_corpus[0])
-    sigs = compute_signatures(pages).cache()
+    sigs = compute_signatures(pages, with_bands=True).cache()
     bands = explode_bands(sigs)
     pairs, stats = candidate_pairs(bands)
     edges = verify_pairs(pairs, pages).cache()
@@ -102,7 +102,7 @@ def test_hot_bucket_salting_preserves_connectivity(spark, tiny_corpus):
         shard_allpairs_cap=1,
     )
     pages = load_pages(spark, tiny_corpus[0])
-    sigs = compute_signatures(pages, cfg).cache()
+    sigs = compute_signatures(pages, cfg, with_bands=True).cache()
     pairs, stats = candidate_pairs(explode_bands(sigs, cfg), cfg)
     edges = verify_pairs(pairs, pages, cfg)
     clusters = connected_components(
@@ -128,7 +128,7 @@ def test_hot_bucket_salting_preserves_connectivity(spark, tiny_corpus):
 
 def test_bucket_histogram(spark, tiny_corpus):
     pages = load_pages(spark, tiny_corpus[0])
-    sigs = compute_signatures(pages)
+    sigs = compute_signatures(pages, with_bands=True)
     hist = bucket_histogram(explode_bands(sigs)).toPandas()
     assert (hist.bucket_size >= 1).all()
     assert hist.n_buckets.sum() > 0
@@ -171,7 +171,8 @@ def test_cc_handles_empty_edges(spark):
 
 def test_cc_chain_converges(spark):
     """Path graph 0-1-2-...-9 → single component labeled 0 — on BOTH the
-    driver union-find path and the distributed min-label loop."""
+    driver union-find path and the distributed large-star/small-star
+    path (driver_threshold=0)."""
     rows = [(i, i + 1) for i in range(9)]
     edges = spark.createDataFrame(rows, "src long, dst long")
     out = connected_components(edges).toPandas()  # driver path (small)
@@ -436,15 +437,18 @@ def test_simhash_auto_widen_recovers_truncated_recall(spark):
 
 
 def test_simhash_block_tables_vs_brute_force(spark):
-    """Manku wide-key block tables (n_blocks=6, C(6,3)=20 tables of
-    ~32-bit keys) on a correlated corpus — the shared-prefix pattern
-    that floods 16-bit chunk buckets: the wide keys dissolve the hot
-    tail, and when no bucket is truncated the verified edge set equals
-    the brute-force Hamming<=r ground truth EXACTLY (pigeonhole
-    completeness + exact verification). The chunk scheme on the same
-    corpus is a subset of truth (its floods are star-truncated, counted
-    in stats), and both schemes find every planted near pair."""
+    """Manku wide-key block tables (simhash_widen_edges: n_blocks=6,
+    C(6,3)=20 tables of ~32-bit keys), run over the WHOLE fingerprint
+    set of a correlated corpus — the shared-prefix pattern that floods
+    16-bit chunk buckets: the wide keys dissolve the hot tail, and when
+    no bucket is truncated the verified edge set equals the brute-force
+    Hamming<=r ground truth EXACTLY (pigeonhole completeness + exact
+    verification). The chunk scheme on the same corpus is a subset of
+    truth (its floods are star-truncated, counted in stats), and both
+    schemes find every planted near pair."""
     import numpy as np
+
+    from finddup_spark.operators.lsh import simhash_widen_edges
 
     rng = np.random.default_rng(11)
     n = 4000
@@ -479,8 +483,8 @@ def test_simhash_block_tables_vs_brute_force(spark):
     chunk_edges, chunk_stats = simhash_candidate_pairs(
         sigs, hamming_radius=3, return_stats=True
     )
-    block_edges, block_stats = simhash_candidate_pairs(
-        sigs, hamming_radius=3, n_blocks=6, return_stats=True
+    block_edges, block_stats = simhash_widen_edges(
+        sigs, hamming_radius=3, return_stats=True
     )
     ce = {(r.src, r.dst, r.hamming) for r in chunk_edges.collect()}
     be = {(r.src, r.dst, r.hamming) for r in block_edges.collect()}

@@ -6,10 +6,7 @@ import pytest
 from finddup_spark.config import DEFAULT_CONFIG, MERSENNE_P
 from finddup_spark.hashing import (
     band_hashes,
-    minhash_signature,
-    minhash_signatures_segmented,
-    modmul61,
-    perm_hash61,
+    oph_signatures_segmented,
     rolling_gram_hashes,
     shingle_hashes,
     simhash_batch,
@@ -19,51 +16,43 @@ from finddup_spark.hashing import (
 )
 
 
-def test_modmul61_matches_bigint():
-    rng = np.random.default_rng(0)
-    a = rng.integers(0, MERSENNE_P, 2000, dtype=np.uint64)
-    b = rng.integers(0, MERSENNE_P, 2000, dtype=np.uint64)
-    got = modmul61(a, b).astype(object)
-    exp = (a.astype(object) * b.astype(object)) % MERSENNE_P
-    assert (got == exp).all()
-
-
-def test_modmul61_edges():
-    M = MERSENNE_P
-    for x, y in [(0, 0), (M - 1, M - 1), (1, M - 1), (M - 1, 1), (0, M - 1)]:
-        got = int(modmul61(np.array([x], dtype=np.uint64), np.array([y], dtype=np.uint64))[0])
-        assert got == (x * y) % M
-
-
-def test_perm_hash61_full_u64_domain():
-    rng = np.random.default_rng(1)
-    x = rng.integers(0, 2**64 - 1, 2000, dtype=np.uint64)
-    a, b = DEFAULT_CONFIG.perm_params
-    got = perm_hash61(x, a[3], b[3]).astype(object)
-    exp = (int(a[3]) * (x.astype(object) % MERSENNE_P) + int(b[3])) % MERSENNE_P
-    assert (got == exp).all()
+def _oph(docs: list[np.ndarray]) -> np.ndarray:
+    cfg = DEFAULT_CONFIG
+    lengths = np.array([len(d) for d in docs])
+    flat = np.concatenate(docs) if docs else np.empty(0, dtype=np.uint64)
+    return oph_signatures_segmented(flat, lengths, cfg.minhash_perms, cfg.seed)
 
 
 def test_segmented_minhash_equals_per_doc():
+    """One OPH batch with empty and one-shingle docs equals the per-doc
+    calls: no bin of one doc borrows from a neighbour's segment."""
     rng = np.random.default_rng(2)
-    a, b = DEFAULT_CONFIG.perm_params
     docs = [rng.integers(0, 2**64 - 1, n, dtype=np.uint64) for n in [5, 0, 120, 1, 33, 0]]
-    lengths = np.array([len(d) for d in docs])
-    allsh = np.concatenate([d for d in docs if len(d)]) if any(len(d) for d in docs) else np.empty(0, dtype=np.uint64)
-    seg = minhash_signatures_segmented(allsh, lengths, a, b)
+    seg = _oph(docs)
+    assert seg.shape == (len(docs), DEFAULT_CONFIG.minhash_perms)
     for i, d in enumerate(docs):
-        assert (seg[i] == minhash_signature(d, a, b)).all()
+        assert (seg[i] == _oph([d])[0]).all()
+
+
+def test_oph_empty_docs_get_sentinel():
+    rng = np.random.default_rng(6)
+    docs = [np.empty(0, dtype=np.uint64), rng.integers(0, 2**64 - 1, 50, dtype=np.uint64),
+            np.empty(0, dtype=np.uint64)]
+    seg = _oph(docs)
+    assert (seg[0] == MERSENNE_P).all() and (seg[2] == MERSENNE_P).all()
+    assert (seg[1] != MERSENNE_P).all()
+    # a batch of only empty docs takes the same sentinel
+    assert (_oph(docs[:1]) == MERSENNE_P).all()
 
 
 def test_minhash_jaccard_estimate():
-    """MinHash collision rate ≈ Jaccard (sanity of the permutation family)."""
+    """OPH bin collision rate ≈ Jaccard (sanity of the densified
+    one-permutation estimator)."""
     rng = np.random.default_rng(3)
-    a, b = DEFAULT_CONFIG.perm_params
     base = rng.integers(0, 2**64 - 1, 1000, dtype=np.uint64)
     other = base.copy()
     other[:200] = rng.integers(0, 2**64 - 1, 200, dtype=np.uint64)  # J ≈ 800/1200
-    s1 = minhash_signature(np.unique(base), a, b)
-    s2 = minhash_signature(np.unique(other), a, b)
+    s1, s2 = _oph([np.unique(base), np.unique(other)])
     est = (s1 == s2).mean()
     true_j = len(set(base) & set(other)) / len(set(base) | set(other))
     assert abs(est - true_j) < 0.12

@@ -1,4 +1,5 @@
-"""Structural job-count ceilings for the dedup entry points.
+"""Structural job-count ceilings for the dedup entry points and the
+staged pipeline.
 
 The round-4 cross_modal regression (un-persisted pair streams re-ran the
 hot-bucket probes and branch unions per consumer, ~2x the job count) was
@@ -25,6 +26,8 @@ from finddup_spark.operators.dedup import (
     minhash_dedup,
     simhash_dedup,
 )
+from finddup_spark.plans.pipeline import DedupPipeline
+from finddup_spark.sources.tables import load_pages
 
 
 def _jobs(spark) -> int:
@@ -87,4 +90,27 @@ def test_dedup_job_ceiling(spark, docs, vecs, name, ceiling):
     assert used <= ceiling, (
         f"{name}_dedup launched {used} Spark jobs (ceiling {ceiling}) — "
         "an action/persist/branch-elision regression"
+    )
+
+
+# measured steady-state jobs of DedupPipeline.run on the 500-row
+# tiny_corpus (local[8], 8 shuffle partitions, 2026-10): 72 + ~28%
+PIPELINE_CEILING = 92
+
+
+def test_pipeline_job_ceiling(spark, tiny_corpus, tmp_path):
+    """The flagship's budget, threads included: the errors tier and the
+    minhash/substring edge tiers submit their jobs from driver threads,
+    which the DAGScheduler counter covers."""
+    pages = load_pages(spark, tiny_corpus[0])
+    # warm run into its own directory; resume=False so the measured run
+    # recomputes every stage instead of skipping finished ones
+    DedupPipeline(spark, str(tmp_path / "warm"), resume=False).run(pages)
+    j0 = _jobs(spark)
+    run = DedupPipeline(spark, str(tmp_path / "steady"), resume=False).run(pages)
+    used = _jobs(spark) - j0
+    assert not any(st.skipped for st in run.stages)
+    assert used <= PIPELINE_CEILING, (
+        f"DedupPipeline.run launched {used} Spark jobs (ceiling "
+        f"{PIPELINE_CEILING}) — an action/persist/branch-elision regression"
     )

@@ -148,3 +148,31 @@ def test_substring_lcs_len_column(spark):
     expect = dp_lcs(docs[0][1], docs[1][1])
     assert expect >= 700
     assert int(edges.lcs_len.iloc[0]) == expect
+
+
+def test_driver_threads_reraise_every_failure():
+    """The tier runner waits for every tier and surfaces EVERY failure:
+    the first raised, the others chained through __context__; a tier
+    that succeeds still completes."""
+    import threading
+
+    from finddup_spark.session import start_driver_threads
+
+    ok = threading.Event()
+    first_failed = threading.Event()
+
+    def _fails_first():
+        first_failed.set()
+        raise ValueError("first")
+
+    def _fails_second():
+        first_failed.wait(timeout=10)
+        raise KeyError("second")
+
+    join = start_driver_threads(_fails_first, ok.set, _fails_second)
+    with pytest.raises(ValueError) as info:
+        join()
+    assert isinstance(info.value.__context__, KeyError)
+    assert ok.is_set()
+    start_driver_threads(ok.clear)()  # no failure: join returns normally
+    assert not ok.is_set()
