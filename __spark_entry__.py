@@ -825,9 +825,11 @@ def _q_cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_boilerplate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level boilerplate n-gram detection: per-doc fraction of
     5-token shingles whose document frequency >= max(2, n_docs // 20).
-    Fully oracled: the shingle semantics mirror signatures._batch_shingles
-    (the same sh CTE the minhash oracle uses), all JVM built-ins, and the
-    df threshold is integer arithmetic on both engines."""
+    Fully oracled: the shingles are ``split(text, " ")`` 5-grams with
+    empty tokens kept (the same sh CTE the minhash oracle uses), all JVM
+    built-ins, and the df threshold is integer arithmetic on both
+    engines. They equal signatures._batch_shingles' whitespace-run
+    shingles only because the sf corpora are single-space separated."""
     from finddup_spark.operators.boilerplate import boilerplate_ratio
 
     docs = _docs(spark, sf_dir)
@@ -1219,9 +1221,11 @@ FROM stats s JOIN ev e USING (doc_id)
 # the sf corpora are single-space separated — verified no \t\n\v\f\r or
 # repeated spaces), hashes them to 64 bits, and accepts pairs whose EXACT
 # distinct-shingle Jaccard >= 0.8 (config.verify_jaccard). String shingles
-# are equality-equivalent to the hashed ones up to 64-bit collisions, and
-# the sf corpora have no pair within [0.7, 0.85] of the threshold, so the
-# decision boundary is collision- and float-safe. Docs shorter than 5
+# are equality-equivalent to the hashed ones unless two distinct shingles
+# collide: ~n²/2⁶⁴ on non-adversarial text such as the sf corpora, though
+# constructed text can force collisions (see finddup_spark.hashing). The
+# sf corpora have no pair within [0.7, 0.85] of the threshold, so the
+# decision boundary is float-safe. Docs shorter than 5
 # tokens take one whole-doc shingle (signatures._batch_shingles).
 #
 # SOUNDNESS of equating the engine's banded-LSH+star edge set with this

@@ -40,7 +40,7 @@ import pandas as pd
 
 from .config import DEFAULT_CONFIG, DedupConfig
 from .extract import render_html
-from .hashing import hash_utf8_array, shingle_hashes
+from .hashing import doc_shingle_set
 
 LANGS = ["en", "fr", "es", "de", "zh"]
 _EPOCH = datetime(2024, 1, 1, 0, 0, 0)
@@ -79,8 +79,6 @@ def _text_of(tokens: list[str], para: int = 60) -> str:
 
 def token_jaccard_shingles(a: list[str], b: list[str], cfg: DedupConfig) -> float:
     """Exact shingle-set Jaccard using the engine's own hashing."""
-    from .hashing import doc_shingle_set
-
     def sh(toks: list[str]) -> set[int]:
         u, _w = doc_shingle_set(" ".join(toks), cfg.shingle_k, cfg.seed)
         return set(u.tolist())

@@ -4,11 +4,13 @@ The scalar layer the reference never had (SURVEY.md §2.8) — all
 Arrow-batched ``mapInPandas`` with numpy inner math, no per-row Python in
 the hot path:
 
-- tokenization: pandas C-level ``.str.split()``;
-- token hashing: FNV-1a over the *unique* vocabulary of the batch only
-  (Zipf text ⇒ |vocab| ≪ |tokens|), then gather;
+- tokenization + token hashing: one byte-level pass over the batch's
+  concatenated UTF-8 (:func:`~finddup_spark.hashing.token_hash_stream`:
+  tokens are maximal non-whitespace byte runs, each hashed by its
+  polynomial byte-span hash — no Python string per token);
 - shingling: ONE global masked window op over the concatenated token-hash
-  array of the whole batch (windows crossing doc boundaries masked out);
+  array of the whole batch (:func:`~finddup_spark.hashing.window_hashes`;
+  windows crossing doc boundaries masked out);
 - MinHash: one-permutation hashing, one hash pass + scatter-min into
   bins per batch (:func:`~finddup_spark.hashing.oph_signatures_segmented`);
 - SimHash: segmented bit-vote matrix (``np.add.reduceat``).
@@ -37,11 +39,11 @@ from pyspark.sql.types import (
 from ..config import DEFAULT_CONFIG, DedupConfig
 from ..hashing import (
     band_hashes,
+    distinct_per_doc,
     oph_signatures_segmented,
-    shingle_hashes,
     simhash_batch,
-    splitmix64,
     token_hash_stream,
+    window_hashes,
 )
 
 _I64 = np.int64
@@ -54,10 +56,11 @@ def _batch_windows(
     — the RAW shingle multiset of one Arrow batch, no deduplication.
 
     Fully vectorized and string-free: the batch's texts are concatenated
-    into ONE byte buffer, tokenized + hashed with the prefix-product
-    rolling hash (hashing.token_hash_stream — no Python string objects),
-    then one global masked window op. Docs shorter than k tokens get one
-    whole-doc shingle (spliced in at their segment position — rare).
+    into ONE byte buffer, tokenized + hashed by
+    :func:`~finddup_spark.hashing.token_hash_stream` (no Python string
+    objects), then one global masked window op
+    (:func:`~finddup_spark.hashing.window_hashes`). Docs shorter than k
+    tokens get one whole-doc shingle.
 
     This is the signature-kernel fast path: MinHash (min over a multiset
     equals min over its distinct set) and SimHash (per-occurrence votes
@@ -70,89 +73,28 @@ def _batch_windows(
         t.encode("utf-8") if isinstance(t, str) else b""
         for t in texts
     ]
-    data = b"\n".join(enc)
     doc_starts = np.zeros(n_docs, dtype=np.int64)
     if n_docs > 1:
         np.cumsum([len(e) + 1 for e in enc[:-1]], out=doc_starts[1:])
-    tok_h, tok_off = token_hash_stream(data, cfg.seed)
-    if len(tok_h) == 0:
-        return np.empty(0, np.uint64), np.zeros(n_docs, dtype=np.int64)
-    doc_idx = np.searchsorted(doc_starts, tok_off, side="right") - 1
-    lengths = np.bincount(doc_idx, minlength=n_docs)
-
-    k = cfg.shingle_k
-    offsets = np.zeros(n_docs, dtype=np.int64)
-    np.cumsum(lengths[:-1], out=offsets[1:])
-
-    N = len(tok_h)
-    if N >= k:
-        # global polynomial window (same math as hashing.shingle_hashes)
-        from ..hashing import SHINGLE_MULT
-
-        vals = np.full(k, SHINGLE_MULT, dtype=np.uint64)
-        vals[0] = np.uint64(1)
-        powers = np.multiply.accumulate(vals)[::-1].copy()
-        n_win = N - k + 1
-        acc = np.zeros(n_win, dtype=np.uint64)
-        for j in range(k):
-            acc += tok_h[j : j + n_win] * powers[j]
-        win_h = splitmix64(acc)
-        valid = doc_idx[:n_win] == doc_idx[k - 1 :]  # window inside one doc
-        w_doc = doc_idx[:n_win][valid]
-        flat = win_h[valid]  # doc-contiguous: doc_idx is nondecreasing
-        counts = np.bincount(w_doc, minlength=n_docs)
-    else:
-        flat = np.empty(0, np.uint64)
-        counts = np.zeros(n_docs, dtype=np.int64)
-
-    # short docs (0 < n < k): one whole-doc shingle (rare — small loop),
-    # spliced into the flat array at each doc's segment start
-    short = np.nonzero((lengths > 0) & (lengths < k))[0]
-    if len(short):
-        seg_starts = np.zeros(n_docs + 1, dtype=np.int64)
-        np.cumsum(counts, out=seg_starts[1:])
-        ins_pos, ins_val = [], []
-        for d in short:
-            h = shingle_hashes(tok_h[offsets[d] : offsets[d] + lengths[d]], k)
-            ins_pos.extend([int(seg_starts[int(d)])] * len(h))
-            ins_val.extend(h.tolist())
-        flat = np.insert(flat, ins_pos, np.array(ins_val, dtype=np.uint64))
-        counts = counts.copy()
-        for d in short:
-            counts[int(d)] += 1
-    return flat, counts.astype(np.int64)
+    tok_h, tok_off = token_hash_stream(b"\n".join(enc), cfg.seed)
+    tok_doc = np.searchsorted(doc_starts, tok_off, side="right") - 1
+    return window_hashes(tok_h, tok_doc, n_docs, cfg.shingle_k)
 
 
 def _batch_shingles(
     texts: pd.Series, cfg: DedupConfig
 ) -> tuple[list[np.ndarray], list[np.ndarray]]:
     """Per-doc (unique shingle hashes, multiplicities) for one Arrow batch
-    — the SET form of :func:`_batch_windows`, deduplicated per doc via one
-    batch-wide lexsort over (doc, hash). Used by verification (exact
-    set-Jaccard needs distinct shingles) and the mirror oracle."""
-    n_docs = len(texts)
-    flat, counts = _batch_windows(texts, cfg)
-    out_sh: list[np.ndarray] = [np.empty(0, np.uint64)] * n_docs
-    out_w: list[np.ndarray] = [np.empty(0, np.float64)] * n_docs
-    if len(flat) == 0:
-        return out_sh, out_w
-    w_doc = np.repeat(np.arange(n_docs, dtype=np.int64), counts)
-    order = np.lexsort((flat, w_doc))
-    sd, sh = w_doc[order], flat[order]
-    new = np.ones(len(sd), dtype=bool)
-    if len(sd) > 1:
-        new[1:] = (sd[1:] != sd[:-1]) | (sh[1:] != sh[:-1])
-    starts = np.nonzero(new)[0]
-    cnts = np.diff(np.append(starts, len(sd)))
-    u_doc, u_hash = sd[starts], sh[starts]
-    doc_los = np.searchsorted(u_doc, np.arange(n_docs))
-    doc_his = np.searchsorted(u_doc, np.arange(n_docs), side="right")
-    for d in range(n_docs):
-        lo, hi = doc_los[d], doc_his[d]
-        if hi > lo:
-            out_sh[d] = u_hash[lo:hi]
-            out_w[d] = cnts[lo:hi].astype(np.float64)
-    return out_sh, out_w
+    — the SET form of :func:`_batch_windows`, deduplicated per doc by
+    :func:`~finddup_spark.hashing.distinct_per_doc`. Used by verification
+    (exact set-Jaccard needs distinct shingles)."""
+    u, per_doc, mult = distinct_per_doc(*_batch_windows(texts, cfg))
+    bounds = np.cumsum(per_doc)
+    # n_docs + 1 pieces; the last, u[bounds[-1]:], is always empty
+    return (
+        np.split(u, bounds)[:-1],
+        np.split(mult.astype(np.float64), bounds)[:-1],
+    )
 
 
 def compute_signatures(

@@ -7,9 +7,28 @@ oracle (:mod:`finddup_spark.oracle`) — that identity is what makes the
 north-rule "dup-pair recall >= 0.99 at the same config" hold at 1.0.
 
 The reference compares raw bytes (``finddup.py:225`` ``datachunks ==``);
-this module is the generalization of that equality test to hashes: token
-FNV-1a, polynomial shingle combine, splitmix64 finalization, and
-one-permutation-hashing MinHash (FIXTURES.md §4).
+this module is the generalization of that equality test to hashes:
+polynomial byte-span token hashes, polynomial k-token shingle windows,
+splitmix64 finalization, and one-permutation-hashing MinHash
+(FIXTURES.md §4).
+
+Every shingle kernel is built from three shared steps: :func:`span_hash`
+(the polynomial hash of byte spans), :func:`window_hashes` (masked
+k-token windows over a doc-ordered token stream, with one whole-doc
+shingle per doc shorter than k) and :func:`distinct_per_doc`. Two
+tokenizers feed them, each pinned by its own oracle:
+:func:`token_hash_stream` (maximal whitespace-free byte runs — the
+MinHash/SimHash path) and ``split(text, " ")`` with empty tokens kept
+(:func:`finddup_spark.operators.boilerplate._batch_space_shingles`, the
+DuckDB ``string_split`` model of boilerplate and contamination).
+
+Collisions: the span hash is a polynomial mod 2^64 with an odd
+multiplier. Two distinct random inputs collide with probability ~2⁻⁶⁴
+(~n²/2⁶⁴ among n), but constructed inputs collide outright: the
+1024-byte Thue–Morse string over {a, b} and its a↔b complement hash
+equal as a token, a space-split gram and a byte gram
+(test_span_hash_thue_morse_collision). Hash equality is therefore
+"equal w.h.p. on non-adversarial text", not proof of equal content.
 """
 
 from __future__ import annotations
@@ -19,7 +38,6 @@ import numpy as np
 from .config import MERSENNE_P
 
 _U64 = np.uint64
-_MASK64 = _U64(0xFFFFFFFFFFFFFFFF)
 
 # FNV-1a 64-bit constants.
 _FNV_OFFSET = 0xCBF29CE484222325
@@ -27,6 +45,7 @@ _FNV_PRIME = 0x100000001B3
 
 #: odd multiplier for polynomial shingle combination (64-bit wraparound).
 SHINGLE_MULT = _U64(0x9E3779B97F4A7C15)  # 2^64 / golden ratio, odd
+_C_INV = _U64(pow(int(SHINGLE_MULT), -1, 1 << 64))
 
 
 def fnv1a64(data: bytes, seed: int = 0) -> int:
@@ -39,25 +58,6 @@ def fnv1a64(data: bytes, seed: int = 0) -> int:
     return h
 
 
-def hash_utf8_array(tokens: np.ndarray, seed: int = 0) -> np.ndarray:
-    """FNV-1a 64 over an array of (unique) strings -> uint64 array.
-
-    Callers pass *unique* tokens only (vocabulary per Arrow batch), so the
-    Python loop runs O(|vocab|), not O(|corpus|) — the batch-level
-    vectorization contract of SURVEY.md §2.8.
-    """
-    out = np.empty(len(tokens), dtype=np.uint64)
-    for i, tok in enumerate(tokens):
-        out[i] = fnv1a64(tok.encode("utf-8"), seed)
-    return out
-
-
-#: ASCII whitespace byte values — the byte-level tokenizer splits on
-#: maximal runs of these (equivalent to str.split() for ASCII-spaced text;
-#: language-agnostic for unspaced scripts).
-_WS_BYTES = np.array([9, 10, 11, 12, 13, 32], dtype=np.uint8)
-
-
 #: byte-stream chunk for the tokenizer — sized so the ~5 per-chunk uint64
 #: temporaries stay L2-resident (the whole-stream version allocates ~50n
 #: bytes of DRAM temporaries; at 32 concurrent UDF workers the memory bus,
@@ -65,84 +65,70 @@ _WS_BYTES = np.array([9, 10, 11, 12, 13, 32], dtype=np.uint8)
 _TOK_CHUNK = 1 << 15
 
 
-def token_hash_stream(data: bytes, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized tokenizer + hasher over raw UTF-8 bytes.
-
-    Returns (token_hashes uint64, token_start_offsets int64). Tokens are
-    maximal non-whitespace byte runs; each token's hash is a polynomial
-    rolling hash of its bytes (prefix-product trick, O(total bytes), no
-    per-token Python) xor-folded with its length and splitmix64-finalized.
-    This is the batch hot path — it never materializes token strings, and
-    it streams the byte buffer in cache-sized chunks cut at whitespace
-    (prefix-sum carry across chunks) so temporaries never touch DRAM.
-    """
-    b = np.frombuffer(data, dtype=np.uint8)
-    n = len(b)
-    if n == 0:
-        return np.empty(0, np.uint64), np.empty(0, np.int64)
-    C = SHINGLE_MULT
-    c_inv = _U64(pow(int(C), -1, 1 << 64))
-    seed_mix = splitmix64(np.array([seed], dtype=np.uint64))[0]
-
-    h_parts: list[np.ndarray] = []
-    s_parts: list[np.ndarray] = []
-    lo = 0
-    while lo < n:
-        hi = min(lo + _TOK_CHUNK, n)
-        if hi < n:
-            # cut at the last whitespace so no token spans a chunk boundary
-            cut = _last_ws(b, lo, hi)
-            while cut < 0:  # pathological: no whitespace in chunk — extend
-                hi = min(hi + _TOK_CHUNK, n)
-                if hi == n:
-                    cut = n
-                    break
-                cut = _last_ws(b, lo, hi)
-            hi = cut if cut > lo else hi
-        cb = b[lo:hi]
-        m = hi - lo
-        is_ws = (
-            (cb == 32) | (cb == 10) | (cb == 9) | (cb == 13) | (cb == 11) | (cb == 12)
-        )
-        nonws = ~is_ws
-        prev_ws = np.empty(m, dtype=bool)
-        # chunks start at 0 or right after a whitespace cut → boundary is ws
-        prev_ws[0] = True if lo == 0 else bool(is_ws_byte(b[lo - 1]))
-        prev_ws[1:] = is_ws[:-1]
-        starts = np.nonzero(nonws & prev_ws)[0]
-        if len(starts):
-            next_ws = np.empty(m, dtype=bool)
-            next_ws[-1] = True if hi == n else bool(is_ws_byte(b[hi]))
-            next_ws[:-1] = is_ws[1:]
-            ends = np.nonzero(nonws & next_ws)[0] + 1
-            # w[j] = b[j] * C^{-(lo+j)} with GLOBAL exponents — tokens never
-            # span chunks, so only within-chunk prefix differences matter
-            invp = _pow_lookup(c_inv, np.arange(lo, hi, dtype=np.int64))
-            P = np.zeros(m + 1, dtype=np.uint64)
-            np.cumsum(cb * invp, out=P[1:])
-            raw = (P[ends] - P[starts]) * _pow_lookup(C, ends + (lo - 1))
-            lens = (ends - starts).astype(np.uint64)
-            h_parts.append(splitmix64(raw ^ (lens << _U64(48)) ^ seed_mix))
-            s_parts.append(starts.astype(np.int64) + lo)
-        lo = hi
-    if not h_parts:
-        return np.empty(0, np.uint64), np.empty(0, np.int64)
-    return np.concatenate(h_parts), np.concatenate(s_parts)
-
-
-def is_ws_byte(x) -> bool:
-    xi = int(x)
-    return xi in (32, 10, 9, 13, 11, 12)
+def _is_ws(b: np.ndarray) -> np.ndarray:
+    """ASCII whitespace mask of a uint8 array: space and \\t \\n \\v \\f \\r."""
+    return (b == 32) | ((b >= 9) & (b <= 13))
 
 
 def _last_ws(b: np.ndarray, lo: int, hi: int) -> int:
     """Index just after the last whitespace byte in b[lo:hi), or -1."""
-    cb = b[lo:hi]
-    ws = (cb == 32) | (cb == 10) | (cb == 9) | (cb == 13) | (cb == 11) | (cb == 12)
-    idx = np.nonzero(ws)[0]
-    if len(idx) == 0:
-        return -1
-    return lo + int(idx[-1]) + 1
+    idx = np.flatnonzero(_is_ws(b[lo:hi]))
+    return lo + int(idx[-1]) + 1 if len(idx) else -1
+
+
+def span_hash(b: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Polynomial hash Σ_{j=s}^{e-1} b[j]·C^(e-1-j) (uint64 wrap) of each
+    byte span ``b[s:e]`` of a uint8 array; an empty span hashes to 0.
+
+    One O(len(b)) prefix sum P[i] = Σ_{j<i} b[j]·C^-(j+1) (C odd ⇒
+    invertible mod 2^64), then every span is a gather: (P[e] - P[s])·C^e.
+    No per-span Python, and the result depends only on the span's bytes,
+    not on where the array starts."""
+    P = np.zeros(len(b) + 1, dtype=np.uint64)
+    np.cumsum(b * _pow_lookup(_C_INV, np.arange(1, len(b) + 1)), out=P[1:])
+    return (P[ends] - P[starts]) * _pow_lookup(SHINGLE_MULT, ends)
+
+
+def token_hash_stream(data: bytes, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized tokenizer + hasher over raw UTF-8 bytes.
+
+    Returns (token_hashes uint64, token_start_offsets int64). Tokens are
+    maximal non-whitespace byte runs; each token's hash is its
+    :func:`span_hash` xor-folded with its length and the seed, then
+    splitmix64-finalized. This is the batch hot path — it never
+    materializes token strings, and it streams the byte buffer in
+    cache-sized chunks so temporaries never touch DRAM; chunks are cut
+    just after whitespace, so no token spans two chunks.
+    """
+    b = np.frombuffer(data, dtype=np.uint8)
+    n = len(b)
+    seed_mix = splitmix64(np.array([seed], dtype=np.uint64))[0]
+    h_parts = [np.empty(0, np.uint64)]
+    s_parts = [np.empty(0, np.int64)]
+    lo = 0
+    while lo < n:
+        hi = min(lo + _TOK_CHUNK, n)
+        if hi < n:
+            cut = _last_ws(b, lo, hi)
+            while cut < 0 and hi < n:  # pathological: no whitespace — extend
+                ext, hi = hi, min(hi + _TOK_CHUNK, n)
+                cut = _last_ws(b, ext, hi)
+            if cut >= 0:
+                hi = cut
+        # both chunk edges are token boundaries (buffer edge or just after
+        # whitespace), so padding the chunk with whitespace on each side
+        # leaves its tokens intact; mask flips alternate start, end, ...
+        cb = b[lo:hi]
+        ws = np.ones(hi - lo + 2, dtype=bool)
+        ws[1:-1] = _is_ws(cb)
+        flips = np.flatnonzero(ws[1:] != ws[:-1])
+        starts, ends = flips[::2], flips[1::2]
+        lens = (ends - starts).astype(np.uint64)
+        raw = span_hash(cb, starts, ends)
+        h_parts.append(splitmix64(raw ^ (lens << _U64(48)) ^ seed_mix))
+        s_parts.append(starts + lo)
+        lo = hi
+    return np.concatenate(h_parts), np.concatenate(s_parts)
 
 
 #: cached split power tables per base — the 512 KB lo table is built once
@@ -193,37 +179,74 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return z ^ (z >> _U64(31))
 
 
+def window_hashes(
+    tok_h: np.ndarray, tok_doc: np.ndarray, n_docs: int, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(flat k-token window hashes grouped by doc, windows per doc) of a
+    doc-ordered uint64 token-hash stream; ``tok_doc`` is each token's doc
+    index in [0, n_docs), nondecreasing.
+
+    Window i hashes splitmix64(Σ_j h[i+j]·C^(k-1-j)) (uint64 wrap), and
+    windows that cross a doc boundary are dropped. A doc with 0 < n < k
+    tokens gets ONE whole-doc shingle, splitmix64(Σ_j h[j]·C^(n-1-j)),
+    spliced in at its segment position (so tiny docs still participate —
+    the analog of the reference hashing even 1-byte files).
+    """
+    pw = _pow_tables(SHINGLE_MULT, 0)[0][:k]  # C^0 … C^(k-1)
+    lengths = np.bincount(tok_doc, minlength=n_docs)
+    n_win = max(len(tok_h) - k + 1, 0)
+    acc = np.zeros(n_win, dtype=np.uint64)
+    for j in range(k):
+        acc += tok_h[j : j + n_win] * pw[k - 1 - j]
+    valid = tok_doc[:n_win] == tok_doc[k - 1 :]  # window inside one doc
+    flat = splitmix64(acc[valid])
+    counts = np.bincount(tok_doc[:n_win][valid], minlength=n_docs)
+    short = (lengths > 0) & (lengths < k)
+    if short.any():
+        pos = np.flatnonzero(short[tok_doc])  # tokens of short docs
+        d = tok_doc[pos]
+        last = np.cumsum(lengths)[d] - 1  # stream index of the doc's last token
+        terms = tok_h[pos] * pw[last - pos]
+        whole = np.add.reduceat(terms, np.flatnonzero(np.diff(d, prepend=-1)))
+        seg_starts = np.cumsum(counts) - counts
+        flat = np.insert(flat, seg_starts[short], splitmix64(whole))
+        counts = counts + short
+    return flat, counts
+
+
+def distinct_per_doc(
+    flat: np.ndarray, counts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-doc distinct of doc-grouped hashes (``counts[d]`` hashes for
+    doc d) via one batch-wide lexsort over (doc, hash). Returns (unique
+    hashes, grouped by doc and ascending within each doc; distinct count
+    per doc; multiplicity of each unique hash)."""
+    n_docs = len(counts)
+    doc = np.repeat(np.arange(n_docs, dtype=np.int64), counts)
+    order = np.lexsort((flat, doc))
+    sd, sh = doc[order], flat[order]
+    new = np.ones(len(sd), dtype=bool)
+    new[1:] = (sd[1:] != sd[:-1]) | (sh[1:] != sh[:-1])
+    starts = np.flatnonzero(new)
+    per_doc = np.bincount(sd[starts], minlength=n_docs)
+    return sh[starts], per_doc, np.diff(starts, append=len(sd))
+
+
+def shingle_hashes(token_hashes: np.ndarray, k: int) -> np.ndarray:
+    """All k-token shingle hashes of one token-hash sequence —
+    :func:`window_hashes` on a one-doc stream: n - k + 1 windows, or ONE
+    whole-sequence shingle when 0 < n < k."""
+    h = token_hashes.astype(np.uint64, copy=False)
+    return window_hashes(h, np.zeros(len(h), dtype=np.int64), 1, k)[0]
+
+
 def doc_shingle_set(text: str, k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """(unique shingle hashes, multiplicities) for ONE doc — the
     single-doc twin of the batch path, shared by the mirror oracle and
     the corpus generator so truth Jaccard uses engine hashing."""
     h, _ = token_hash_stream(text.encode("utf-8"), seed)
-    sh = shingle_hashes(h, k)
-    u, counts = np.unique(sh, return_counts=True)
+    u, counts = np.unique(shingle_hashes(h, k), return_counts=True)
     return u, counts.astype(np.float64)
-
-
-def shingle_hashes(token_hashes: np.ndarray, k: int) -> np.ndarray:
-    """All k-token shingle hashes of one token-hash sequence (vectorized).
-
-    Polynomial window: sh[i] = sum_j h[i+j] * C^(k-1-j) (uint64 wrap),
-    then splitmix64. A sequence shorter than k yields ONE shingle over the
-    whole sequence (so tiny docs still participate — the analog of the
-    reference hashing even 1-byte files).
-    """
-    n = len(token_hashes)
-    h = token_hashes.astype(np.uint64, copy=False)
-    kk = min(k, n) if n > 0 else 0
-    if kk == 0:
-        return np.empty(0, dtype=np.uint64)
-    vals = np.full(kk, SHINGLE_MULT, dtype=np.uint64)
-    vals[0] = _U64(1)
-    powers = np.multiply.accumulate(vals)[::-1].copy()  # [C^{k-1} … C, 1]
-    n_windows = n - kk + 1
-    acc = np.zeros(n_windows, dtype=np.uint64)
-    for j in range(kk):
-        acc += h[j : j + n_windows] * powers[j]
-    return splitmix64(acc)
 
 
 def oph_signatures_segmented(
@@ -367,31 +390,14 @@ def simhash_batch(
 # ---------------------------------------------------------------------------
 
 def rolling_gram_hashes(data: bytes, gram: int) -> np.ndarray:
-    """Hash every ``gram``-byte window of ``data`` (vectorized prefix trick).
-
-    Polynomial hash H[i] = Σ_{j<g} b[i+j] * C^(g-1-j) (uint64 wrap) computed
-    for ALL windows at once: H[i] = (P[i+g] - P[i]) * Cinv^i where
-    P[i] = Σ_{j<i} b[j] * C^(g-1+i-j)… implemented with the standard
-    inverse-power normalization (C odd ⇒ invertible mod 2^64).
-    """
-    b = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    n = len(b)
-    if n < gram:
+    """splitmix64 of the :func:`span_hash` of every ``gram``-byte window
+    of ``data``: H[i] = Σ_{j<g} b[i+j]·C^(g-1-j), all windows in one
+    prefix pass."""
+    b = np.frombuffer(data, dtype=np.uint8)
+    if len(b) < gram:
         return np.empty(0, dtype=np.uint64)
-    C = SHINGLE_MULT
-    c_inv = _U64(pow(int(C), -1, 1 << 64))
-    # powers C^0..C^{n-1} and inverse powers
-    pows = np.empty(n, dtype=np.uint64)
-    pows[0] = _U64(1)
-    np.multiply.accumulate(np.full(n - 1, C, dtype=np.uint64), out=pows[1:]) if n > 1 else None
-    # weighted prefix sums: P[i] = Σ_{j<i} b[j] * C^{-j}  (times nothing)
-    w = b * np.concatenate(([_U64(1)], np.multiply.accumulate(np.full(n - 1, c_inv, dtype=np.uint64))))
-    P = np.zeros(n + 1, dtype=np.uint64)
-    np.cumsum(w, out=P[1:])
-    diff = P[gram:] - P[:-gram]            # Σ_{j=i..i+g-1} b[j] C^{-j}
-    # multiply by C^{i+g-1} to normalize window i to Σ b[i+j] C^{g-1-j}
-    norm = pows[gram - 1] * np.concatenate(([_U64(1)], np.multiply.accumulate(np.full(n - gram, C, dtype=np.uint64)))) if n - gram + 1 > 1 else pows[gram - 1 : gram]
-    return splitmix64(diff * norm)
+    starts = np.arange(len(b) - gram + 1)
+    return splitmix64(span_hash(b, starts, starts + gram))
 
 
 def winnow(hashes: np.ndarray, window: int) -> np.ndarray:

@@ -10,9 +10,12 @@ quality signal (and the shingle list a removal mask).
 The oracle-checked STRING path (``hashed=False``) is JVM-side built-ins
 (split / transform / slice / array_join / explode + two hash
 aggregations) — no UDF, so a DuckDB oracle reproduces the output
-exactly; shingle semantics mirror signatures._batch_shingles (k-token
-windows over single-space tokens; docs shorter than k take one
-whole-doc shingle). The PRODUCTION hashed path computes the same grams
+exactly. Shingles are k-token windows over ``split(text, " ")`` tokens
+(single-space separator, empty tokens kept — DuckDB's ``string_split``);
+docs shorter than k take one whole-doc shingle. This is NOT the
+signature kernel's tokenizer (maximal whitespace runs): the two agree
+only on single-space-separated text such as the sf corpora. The
+PRODUCTION hashed path computes the same grams
 through a vectorized numpy ``mapInPandas`` kernel
 (:func:`_batch_space_shingles`) — the interpreted higher-order string
 build measured ~500 s at 1.09M pages vs ~9 s for the kernel, and only
@@ -29,11 +32,14 @@ broadcasts back for the per-doc ratio join.
 hash per gram instead of the gram string — computed in the numpy
 kernel, already per-doc distinct — so every exchanged row carries a
 long instead of a ~30-60-byte k-token string: ~5-10x fewer shuffle
-bytes with identical counts up to 64-bit collisions (~n²/2⁶⁴,
-negligible at any df threshold). The string form (``hashed=False``) is
-kept for the driver oracle query, whose DuckDB twin recomputes shingle
-VALUES (xxhash64 is not ANSI-SQL-computable), and doubles as the
-collision-free reference in tests.
+bytes with identical counts unless two distinct grams collide. For
+non-adversarial text that happens at ~n²/2⁶⁴ over n distinct grams;
+constructed text can merge distinct grams on purpose (the polynomial
+hash is not collision-resistant — see :mod:`finddup_spark.hashing`).
+The string form (``hashed=False``) is kept for the driver oracle query,
+whose DuckDB twin recomputes shingle VALUES (the engine's polynomial
+gram hash is not a DuckDB built-in), and doubles as the collision-free
+reference in tests.
 """
 
 from __future__ import annotations
@@ -41,6 +47,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..hashing import distinct_per_doc, span_hash, splitmix64, window_hashes
 
 
 def _batch_space_shingles(texts, k: int):
@@ -52,19 +60,18 @@ def _batch_space_shingles(texts, k: int):
 
     Replicates ``split(text, " ")`` EXACTLY (single-space separator,
     empty tokens preserved — not the signature kernel's whitespace-run
-    tokenizer), k-token windows, ONE whole-doc gram when a doc has fewer
-    than k tokens, and per-doc distinct. Hashes are polynomial rolling
-    hashes instead of xxhash64(window string) — the hashed path's
-    contract is equality structure only (both sides of the contamination
-    join and the boilerplate df-count use the SAME function, and the
-    oracle checks the string path), so any injective-w.h.p. hash of the
-    token sequence is admissible; a window's joined string and its token
-    sequence determine each other bijectively (k tokens ⇔ k-1 separator
-    spaces), so string equality == token-sequence equality.
+    tokenizer); everything after the token spans is the shared kernel of
+    :mod:`finddup_spark.hashing`: span hash, k-token windows with ONE
+    whole-doc gram when a doc has fewer than k tokens, per-doc distinct.
+    Hashes are polynomial rolling hashes instead of xxhash64(window
+    string) — the hashed path's contract is equality structure only
+    (both sides of the contamination join and the boilerplate df-count
+    use the SAME function, and the oracle checks the string path); a
+    window's joined string and its token sequence determine each other
+    bijectively (k tokens ⇔ k-1 separator spaces), so string equality ==
+    token-sequence equality, and hash equality == string equality up to
+    the collision limit of :mod:`finddup_spark.hashing`.
     """
-    from ..hashing import SHINGLE_MULT, shingle_hashes, splitmix64
-
-    C = np.uint64(SHINGLE_MULT)
     n_docs = len(texts)
     enc = [t.encode("utf-8") if isinstance(t, str) else b"" for t in texts]
     lens = np.array([len(e) for e in enc], dtype=np.int64)
@@ -73,22 +80,6 @@ def _batch_space_shingles(texts, k: int):
         np.cumsum(lens[:-1], out=doc_starts[1:])
     doc_ends = doc_starts + lens
     b = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    m = len(b)
-
-    # byte-level prefix polynomial: raw(a, e) = sum_{j=a}^{e-1} b[j]*C^(e-1-j)
-    # = (S[e] - S[a]) * C^(e-1) with S = cumsum(b * C^-j) — one O(m) pass,
-    # every token hash then a gather (no per-token work)
-    with np.errstate(over="ignore"):
-        P = np.full(max(m, 1), C, dtype=np.uint64)
-        P[0] = np.uint64(1)
-        P = np.multiply.accumulate(P)  # P[j] = C^j
-        c_inv = np.uint64(pow(int(C), -1, 1 << 64))
-        Pinv = np.full(max(m, 1), c_inv, dtype=np.uint64)
-        Pinv[0] = np.uint64(1)
-        Pinv = np.multiply.accumulate(Pinv)
-        S = np.zeros(m + 1, dtype=np.uint64)
-        if m:
-            np.cumsum(b.astype(np.uint64) * Pinv[:m], out=S[1:])
 
     # token spans of split(text, " "): one token per inter-space segment,
     # empties preserved; every doc has >= 1 token (split("") == [""])
@@ -109,63 +100,10 @@ def _batch_space_shingles(texts, k: int):
     tend[is_last] = doc_ends
     tend[~is_last] = space_pos
 
-    with np.errstate(over="ignore"):
-        nonempty = tend > tstart
-        raw = np.zeros(total, dtype=np.uint64)
-        if m:
-            raw[nonempty] = (S[tend[nonempty]] - S[tstart[nonempty]]) * P[
-                tend[nonempty] - 1
-            ]
-        # fold length so token b"\x00" != empty token
-        tok_h = splitmix64(raw ^ (tend - tstart).astype(np.uint64))
-
-        # k-token windows over the concatenated token-hash stream, windows
-        # crossing doc boundaries masked (same pattern as
-        # signatures._batch_windows; same math as hashing.shingle_hashes)
-        w_doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), cnt)
-        if total >= k:
-            vals = np.full(k, C, dtype=np.uint64)
-            vals[0] = np.uint64(1)
-            powers = np.multiply.accumulate(vals)[::-1].copy()
-            n_win = total - k + 1
-            acc = np.zeros(n_win, dtype=np.uint64)
-            for j in range(k):
-                acc += tok_h[j : j + n_win] * powers[j]
-            win_h = splitmix64(acc)
-            valid = w_doc_idx[:n_win] == w_doc_idx[k - 1 :]
-            flat = win_h[valid]
-            wcounts = np.bincount(w_doc_idx[:n_win][valid], minlength=n_docs)
-        else:
-            flat = np.empty(0, dtype=np.uint64)
-            wcounts = np.zeros(n_docs, dtype=np.int64)
-        wcounts = wcounts.astype(np.int64)
-
-        # docs with fewer than k tokens: ONE whole-doc gram (rare — loop)
-        short = np.nonzero(cnt < k)[0]
-        if len(short):
-            seg_starts = np.zeros(n_docs + 1, dtype=np.int64)
-            np.cumsum(wcounts, out=seg_starts[1:])
-            ins_pos, ins_val = [], []
-            for d in short:
-                h = shingle_hashes(tok_h[tok_off[d] : tok_off[d + 1]], k)
-                ins_pos.append(int(seg_starts[int(d)]))
-                ins_val.append(h[0])
-            flat = np.insert(flat, ins_pos, np.array(ins_val, dtype=np.uint64))
-            wcounts = wcounts.copy()
-            wcounts[short] += 1
-
-    # per-doc distinct via one batch-wide lexsort (signatures._batch_shingles)
-    if len(flat) == 0:
-        return flat, np.zeros(n_docs, dtype=np.int64)
-    w_doc_flat = np.repeat(np.arange(n_docs, dtype=np.int64), wcounts)
-    order = np.lexsort((flat, w_doc_flat))
-    sd, sh = w_doc_flat[order], flat[order]
-    new = np.ones(len(sd), dtype=bool)
-    if len(sd) > 1:
-        new[1:] = (sd[1:] != sd[:-1]) | (sh[1:] != sh[:-1])
-    u_doc, u_hash = sd[new], sh[new]
-    out_counts = np.bincount(u_doc, minlength=n_docs).astype(np.int64)
-    return u_hash, out_counts
+    # fold length so token b"\x00" != empty token
+    tok_h = splitmix64(span_hash(b, tstart, tend) ^ (tend - tstart).astype(np.uint64))
+    tok_doc = np.repeat(np.arange(n_docs, dtype=np.int64), cnt)
+    return distinct_per_doc(*window_hashes(tok_h, tok_doc, n_docs, k))[:2]
 
 
 def doc_shingles(
@@ -176,8 +114,9 @@ def doc_shingles(
     hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, shingle) — DISTINCT k-token shingles per document
-    (single-space tokenization, whole-doc shingle when shorter than k —
-    the exact semantics of signatures._batch_shingles). ``hashed=True``
+    (``split(text, " ")`` tokens with empty tokens kept, whole-doc
+    shingle when shorter than k; the signature kernel's whitespace-run
+    tokens agree only on single-space-separated text). ``hashed=True``
     replaces each shingle string with an 8-byte polynomial hash computed
     in the vectorized kernel (:func:`_batch_space_shingles`) — upstream
     of the explode and of every shuffle, so no exchange ever carries
@@ -269,9 +208,10 @@ def boilerplate_ratio(
     tiny count action, mirrored in the SQL oracle as a scalar subquery).
 
     ``hashed=True`` (default, the production path) shuffles 8-byte
-    shingle hashes instead of shingle strings — identical output up to
-    negligible 64-bit collisions; pass ``hashed=False`` for the
-    collision-free string form the SQL oracle can recompute.
+    shingle hashes instead of shingle strings — identical output unless
+    distinct shingles collide (rare on natural text, constructible on
+    purpose; see :mod:`finddup_spark.hashing`); pass ``hashed=False``
+    for the collision-free string form the SQL oracle can recompute.
 
     The boilerplate set is broadcast: by construction it is the head of
     the df distribution (|set| <= total_shingle_occurrences / min_df)."""

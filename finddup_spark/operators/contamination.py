@@ -25,9 +25,10 @@ string form (``hashed=False``) is what the DuckDB driver oracle
 recomputes value-for-value; tests prove hashed == string.
 
 Gram semantics are shared with boilerplate.doc_shingles: k-token
-windows over the engine/oracle whitespace class, whole-doc gram when a
-text is shorter than n tokens (so short benchmark prompts still
-contaminate their verbatim copies).
+windows over ``split(text, " ")`` tokens (single-space separator, empty
+tokens kept — not the signature kernel's whitespace-run tokenizer),
+whole-doc gram when a text is shorter than n tokens (so short benchmark
+prompts still contaminate their verbatim copies).
 """
 
 from __future__ import annotations

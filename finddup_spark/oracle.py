@@ -20,10 +20,9 @@ import pandas as pd
 from .config import DEFAULT_CONFIG, DedupConfig
 from .hashing import (
     band_hashes,
-    hash_utf8_array,
+    doc_shingle_set,
     oph_signatures_segmented,
     rolling_gram_hashes,
-    shingle_hashes,
     simhash64,
     winnow,
 )
@@ -64,8 +63,6 @@ def doc_shingles(text: str, cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     """(unique shingle hashes, multiplicities) — shares the byte-level
     tokenizer + hash with the engine (hashing.doc_shingle_set), so the
     oracle's integers are the engine's integers by construction."""
-    from .hashing import doc_shingle_set
-
     return doc_shingle_set(text, cfg.shingle_k, cfg.seed)
 
 

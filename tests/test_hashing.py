@@ -1,6 +1,7 @@
 """Hashing primitives vs big-int ground truth (SURVEY.md §2.8)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from finddup_spark.config import DEFAULT_CONFIG, MERSENNE_P
@@ -11,6 +12,7 @@ from finddup_spark.hashing import (
     shingle_hashes,
     simhash_batch,
     splitmix64,
+    token_hash_stream,
     winnow,
     SHINGLE_MULT,
 )
@@ -122,3 +124,24 @@ def test_simhash_batch_similarity():
     ham = lambda a, b: bin(int(a) ^ int(b)).count("1")
     assert ham(fps[0], fps[1]) < 10
     assert ham(fps[0], fps[2]) > 20
+
+
+def test_span_hash_thue_morse_collision():
+    """The polynomial span hash mod 2^64 is not collision-resistant: the
+    1024-byte Thue-Morse string over {a, b} and its a<->b complement
+    differ, yet their difference polynomial is a product of ten
+    (1 - C^(2^i)) factors, each divisible by a rising power of two, so it
+    vanishes mod 2^64 for any odd multiplier C. Tokens, space-split grams
+    and byte grams built on the span hash all collide on this pair."""
+    from finddup_spark.operators.boilerplate import _batch_space_shingles
+
+    tm = bytes(b"ab"[bin(i).count("1") & 1] for i in range(1024))
+    comp = tm.translate(bytes.maketrans(b"ab", b"ba"))
+    assert tm != comp
+    assert token_hash_stream(tm)[0] == token_hash_stream(comp)[0]
+    ta, tb = tm.decode(), comp.decode()
+    for k in (5, 8):
+        ga, _ = _batch_space_shingles(pd.Series([ta]), k)
+        gb, _ = _batch_space_shingles(pd.Series([tb]), k)
+        assert np.array_equal(ga, gb)
+    assert np.array_equal(rolling_gram_hashes(tm, 1024), rolling_gram_hashes(comp, 1024))

@@ -12,7 +12,7 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from finddup_spark.config import DEFAULT_CONFIG
-from finddup_spark.hashing import shingle_hashes, splitmix64
+from finddup_spark.hashing import doc_shingle_set, shingle_hashes, splitmix64
 from finddup_spark.oracle import run_oracle
 
 _token = st.text(alphabet="abcdef", min_size=1, max_size=4)
@@ -115,13 +115,14 @@ def test_global_seq_equals_pandas_rank(spark, rows):
 
 @settings(max_examples=20, deadline=None)
 @given(st.lists(
-    st.text(alphabet="ab cd", min_size=0, max_size=40), min_size=1, max_size=12,
+    st.text(alphabet="ab cd\t\né", min_size=0, max_size=40), min_size=1, max_size=12,
 ))
 def test_batch_windows_multiset_matches_set_form(texts):
     """_batch_windows (raw multiset, signature fast path) and
     _batch_shingles (unique+counts, verify path) must describe the same
     per-doc shingle multiset — including empty docs, whitespace-only
-    docs, and docs shorter than k (the whole-doc-shingle splice)."""
+    docs, and docs shorter than k (the whole-doc-shingle splice) — and
+    the batch form must equal the single-doc hashing.doc_shingle_set."""
     from finddup_spark.functions.signatures import (
         _batch_shingles,
         _batch_windows,
@@ -139,3 +140,32 @@ def test_batch_windows_multiset_matches_set_form(texts):
         assert np.array_equal(uniq, np.sort(sh[d]))
         order = np.argsort(sh[d])
         assert np.array_equal(cnt.astype(np.float64), w[d][order])
+        one_u, one_w = doc_shingle_set(texts[d], DEFAULT_CONFIG.shingle_k, DEFAULT_CONFIG.seed)
+        assert np.array_equal(one_u, sh[d][order])
+        assert np.array_equal(one_w, w[d][order])
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(st.text(alphabet="ab  ", min_size=0, max_size=30), min_size=1, max_size=10),
+    st.integers(1, 6),
+)
+def test_space_shingles_match_split_semantics(texts, k):
+    """_batch_space_shingles keeps the ``text.split(" ")`` token model:
+    repeated, leading and trailing spaces make empty tokens, a doc with
+    fewer than k tokens takes one whole-doc gram, and the per-doc
+    distinct count equals the number of distinct Python k-grams."""
+    from finddup_spark.operators.boilerplate import _batch_space_shingles
+
+    flat, counts = _batch_space_shingles(pd.Series(texts), k)
+    all_grams = set()
+    for d, t in enumerate(texts):
+        toks = t.split(" ")
+        if len(toks) < k:
+            grams = {tuple(toks)}
+        else:
+            grams = {tuple(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+        assert counts[d] == len(grams)
+        all_grams |= grams
+    assert counts.sum() == len(flat)
+    assert len(np.unique(flat)) == len(all_grams)
